@@ -547,7 +547,13 @@ def compact_table(
     each file's min/max box narrow in EVERY clustered dimension, so
     conjunctive predicates (a BETWEEN … AND b BETWEEN …) skip
     multiplicatively (pinned by test against the lexicographic
-    layout). Column ranges come from one min/max aggregate.
+    layout). With min/max statistics, a file whose Z range crosses a
+    Morton cell boundary gets a box spanning both cells, which costs a
+    roughly constant few extra candidates per query box; the Z
+    layout's lead over the lexicographic one therefore grows with the
+    output file count (a 1/4 × 1/4 box on uniform data: 4 vs 5
+    candidate files at 17 files, 5 vs 11 at 39). Column ranges come
+    from one min/max aggregate.
 
     Scale shape: one distributed read + repartition + write; nothing
     driver-side but directory renames. Run it from the maintenance
