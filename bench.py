@@ -52,7 +52,7 @@ divergence is evidence for adjudication, not a verdict by itself.
 r13: the cache is cleared at every query-slot boundary (see the pass
 loop), so each timed execution computes from the parquet inputs with a
 clean cache — the r12 verdict's session-state item. Measured before
-changing (tools/cache_drag_probe.py): 60 persisted frames add NO drag
+changing (OPTIMIZATION_r13.md §2): 60 persisted frames add NO drag
 to the control workload (dirty/clean 0.992), and a quiet r13 window
 read weather_divergence 1.03 under the OLD semantics — so the r12
 driver window's divergence 1.459 was the documented width bias of a
@@ -391,7 +391,7 @@ def main() -> None:
     # the parquet inputs, and the min-of-3 estimates the cold-cache
     # cost of the query in an otherwise-clean session. Within one timed
     # execution persists still work exactly as the operators intend.
-    # (Measured first: tools/cache_drag_probe.py shows 60 cached frames
+    # (Measured first, OPTIMIZATION_r13.md §2: 60 cached frames
     # add NO drag to the control — dirty/clean 0.992 — so this is an
     # honesty fix for the QUERY numbers, not a control repair; the r12
     # weather_divergence 1.459 was storm width-bias, see the module

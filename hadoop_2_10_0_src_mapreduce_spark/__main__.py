@@ -349,33 +349,25 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "index":
+        from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store
+
+        # every verb but build reads the family from the index itself
+        try:
+            fam = None if args.action == "build" else ann_store.family_of(args.path)
+        except ValueError as e:
+            raise SystemExit(str(e)) from e
         if args.action in ("pointer", "rollback"):
             # one-time conversion to blink-free (symlink-generation)
             # swaps on the row store, so compact/maintain can run while
             # the index serves (one final ENOENT blink happens NOW,
             # before serving starts — see enable_pointer_swaps).
-            # Pure-filesystem action: no Spark session, no fixture
-            # tables; the row-store subdir is detected from the index
-            # itself (exactly one of lists/buckets exists per family)
-            import os
-
+            # Pure-filesystem action: no Spark session, no fixture tables
             from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
                 enable_pointer_swaps,
                 rollback_pointer_swap,
             )
 
-            subs = [
-                s for s in ("lists", "buckets")
-                if os.path.isdir(f"{args.path}/{s}")
-                or os.path.islink(f"{args.path}/{s}")
-            ]
-            if len(subs) != 1:
-                raise SystemExit(
-                    f"{args.path} holds {subs or 'no row store'} — "
-                    "expected exactly one of lists/ (ivf, ivfpq) or "
-                    "buckets/ (lsh)"
-                )
-            store = f"{args.path}/{subs[0]}"
+            store = f"{args.path}/{fam.rows}"
             if args.action == "pointer":
                 enable_pointer_swaps(store)
                 print(f"pointer swaps enabled on {store}")
@@ -384,9 +376,11 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"rolled {store} back to {gen}")
             return 0
 
+        import json
+
         from pyspark.sql import functions as F
 
-        from hadoop_2_10_0_src_mapreduce_spark.operators import similarity
+        from hadoop_2_10_0_src_mapreduce_spark.operators import pq, similarity
         from hadoop_2_10_0_src_mapreduce_spark.session import get_spark
         from hadoop_2_10_0_src_mapreduce_spark.sources.readers import load_table
 
@@ -395,87 +389,60 @@ def main(argv: list[str] | None = None) -> int:
         emb = load_table(spark, args.sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        from hadoop_2_10_0_src_mapreduce_spark.operators import pq as pqmod
-
         if args.action == "build":
-            if args.family == "ivf":
-                similarity.save_ivf_index(emb, args.path, quantize=args.quantize)
-            elif args.family == "ivfpq":
-                pqmod.save_ivfpq_index(emb, args.path, residual=args.residual)
+            if args.family == "ivfpq":
+                pq.save_ivfpq_index(emb, args.path, residual=args.residual)
             else:
-                similarity.save_lsh_index(emb, args.path, quantize=args.quantize)
+                save = {"ivf": similarity.save_ivf_index,
+                        "lsh": similarity.save_lsh_index}[args.family]
+                save(emb, args.path, quantize=args.quantize)
             print(f"built {args.family} index at {args.path}")
         elif args.action == "append":
             batch = emb.where(args.where) if args.where else emb
-            if args.family == "ivf":
-                similarity.append_to_ivf_index(batch, args.path)
-            elif args.family == "ivfpq":
-                pqmod.append_to_ivfpq_index(batch, args.path)
-            else:
-                similarity.append_to_lsh_index(batch, args.path)
-            print(f"appended to {args.family} index at {args.path}")
+            ann_store.append(fam, batch, args.path)
+            print(f"appended to {fam.name} index at {args.path}")
         elif args.action == "delete":
             if not args.ids:
                 raise SystemExit("delete requires --ids")
-            similarity.delete_from_index(
+            ann_store.delete_from_index(
                 spark, args.path, [int(i) for i in args.ids.split(",")]
             )
             print(f"tombstoned {args.ids} in {args.path}")
         elif args.action == "compact":
-            if args.family in ("ivf", "ivfpq"):
-                similarity.compact_ivf_index(spark, args.path)
-            else:
-                similarity.compact_lsh_index(spark, args.path)
-            print(f"compacted {args.family} index at {args.path}")
-        elif args.action == "stats":
-            import json as _json
-
-            print(_json.dumps(similarity.index_stats(
-                spark, args.path, recall_target=args.recall_target
-            )))
-        elif args.action == "maintain":
-            import json as _json
-
-            print(_json.dumps(similarity.maintain_index(
+            ann_store.compact(fam, spark, args.path)
+            print(f"compacted {fam.name} index at {args.path}")
+        elif args.action in ("stats", "maintain"):
+            report = (ann_store.index_stats if args.action == "stats"
+                      else ann_store.maintain_index)
+            print(json.dumps(report(
                 spark, args.path, recall_target=args.recall_target
             )))
         elif args.action == "rebuild":
-            if args.family == "ivfpq":
-                # codes are not invertible enough to retrain from:
-                # rebuild re-saves from the source-of-truth embeddings,
-                # carrying the stored conf (residual, code geometry)
-                pqmod.rebuild_ivfpq_index(
-                    spark, args.path, emb, n_centroids=args.n_centroids
-                )
-            elif args.family == "ivf":
-                similarity.rebuild_ivf_index(
-                    spark, args.path, n_centroids=args.n_centroids
-                )
-            else:
-                similarity.rebuild_lsh_index(
-                    spark, args.path,
-                    n_tables=args.n_tables,
-                    n_planes=args.n_planes,
-                    max_bucket=args.max_bucket,
-                )
-            print(f"rebuilt {args.family} index at {args.path}")
+            # codes are not invertible enough to retrain from: an
+            # ivfpq rebuild re-saves from the source-of-truth embeddings
+            ann_store.rebuild(
+                fam, spark, args.path,
+                corpus=emb if fam.needs_source else None,
+                **{g: getattr(args, g) for g in fam.geometry},
+            )
+            print(f"rebuilt {fam.name} index at {args.path}")
         else:
             queries = emb.where(F.col("vec_id") < args.n_queries)
-            if args.family == "ivfpq":
-                serve = lambda q, p, k: pqmod.query_ivfpq_index(
-                    q, p, k=k, n_probe=args.n_probe, rescore=emb
+            if fam is pq.IVFPQ:
+                served = pq.query_ivfpq_index(
+                    queries, args.path, k=args.k, n_probe=args.n_probe,
+                    rescore=emb,
                 )
-            elif args.family == "ivf":
-                serve = lambda q, p, k: similarity.query_ivf_index(
-                    q, p, k=k, n_probe=args.n_probe
+            elif fam is similarity.IVF:
+                served = similarity.query_ivf_index(
+                    queries, args.path, k=args.k, n_probe=args.n_probe
                 )
             else:
-                serve = lambda q, p, k: similarity.query_lsh_index(
-                    q, p, k=k, n_multiprobe=args.n_multiprobe
+                served = similarity.query_lsh_index(
+                    queries, args.path, k=args.k,
+                    n_multiprobe=args.n_multiprobe,
                 )
-            serve(queries, args.path, k=args.k).orderBy(
-                "query_id", "rnk"
-            ).show(args.limit, truncate=False)
+            served.orderBy("query_id", "rnk").show(args.limit, truncate=False)
         return 0
 
     if args.query not in qs:

@@ -41,14 +41,16 @@ smaller. The trade is a write+read per round vs a block copy — at the
 scale where reliability matters the shuffle dominates and the delta
 is noise.
 
-Cleanup contract: intermediate steps are deleted eagerly
-(previous-step files are removed as soon as the current step is
-materialized, so the dir holds at most TWO steps at any moment). The
-FINAL step's files back the DataFrame the loop returns — they must
-outlive the call, so ``close()`` (or the caller) removes them only
+Cleanup contract, the same in both modes: intermediate steps are
+released eagerly (a step is dropped as soon as the step after its
+successor is materialized, so at most TWO steps live at any moment).
+Releasing a reliable step deletes its directory; releasing a local
+step unpersists its checkpointed RDD, which ``clearCache()`` does not
+touch. The FINAL step backs the DataFrame the loop returns — it must
+outlive the call, so ``close()`` (or the caller) releases it only
 when the result has been consumed/persisted elsewhere; callers that
-return checkpointed frames document that the dir lives until the
-caller is done with the result.
+return checkpointed frames document that it lives until the caller
+is done with the result.
 """
 
 from __future__ import annotations
@@ -70,7 +72,7 @@ class RoundCheckpointer:
     """Per-round lineage truncation: local (fast, default) or reliable
     (``checkpoint_dir`` set — parquet round-trip with eager cleanup of
     superseded steps). One instance per loop; call it on each round's
-    frame; ``close()`` removes every file it still owns (safe only
+    frame; ``close()`` releases every step it still holds (safe only
     after the loop's result is fully consumed or persisted)."""
 
     def __init__(
@@ -83,7 +85,9 @@ class RoundCheckpointer:
         self.spark = spark
         self.dir = checkpoint_dir
         self.n = 0
-        self._live: list[str] = []  # step dirs not yet deleted
+        # steps not yet released: step dirs (reliable mode) or the
+        # localCheckpoint frames (local mode)
+        self._live: list = []
         #: newest COMPLETE step's frame from a prior run at this dir,
         #: when ``resume=True`` found one — the loop restarts from it
         self.resumed: DataFrame | None = None
@@ -160,35 +164,42 @@ class RoundCheckpointer:
 
     def __call__(self, df: DataFrame) -> DataFrame:
         if self.dir is None:
-            return df.localCheckpoint()
-        path = f"{self.dir}/step-{self.n:05d}"
-        self.n += 1
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+            out = step = df.localCheckpoint()
+        else:
+            step = f"{self.dir}/step-{self.n:05d}"
+            self.n += 1
+            df.write.mode("overwrite").parquet(step)
+            out = self.spark.read.parquet(step)
         # the PREVIOUS step fed this one and is now superseded; steps
         # before it were already dropped, so at most two live at once
-        while len(self._live) > 1:
-            _hadoop_delete(self.spark, self._live.pop(0))
-        self._live.append(path)
+        self._release(keep=1)
+        self._live.append(step)
         return out
+
+    def _release(self, keep: int) -> None:
+        """Release all but the newest ``keep`` live steps."""
+        while len(self._live) > keep:
+            step = self._live.pop(0)
+            if isinstance(step, str):
+                _hadoop_delete(self.spark, step)
+            else:  # the LogicalRDD behind a localCheckpoint frame
+                step._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
     def retire_intermediates(self) -> None:
         """Drop every step except the newest (the one backing the
         loop's result)."""
-        while len(self._live) > 1:
-            _hadoop_delete(self.spark, self._live.pop(0))
+        self._release(keep=1)
 
     def close(self) -> None:
-        """Remove ALL remaining step files — only after the returned
-        frame has been consumed or persisted elsewhere — and then the
+        """Release ALL remaining steps — only after the returned frame
+        has been consumed or persisted elsewhere — and then the
         (now-empty) checkpoint dir itself: per-batch callers (the
         streaming sinks mint one dir per micro-batch) would otherwise
         accumulate one empty directory per batch without bound —
         listing/inode cost on HDFS, per-prefix object growth on object
         stores (the r10 ADVICE). Non-recursive delete, so a dir the
         caller put OTHER files into is left alone."""
-        while self._live:
-            _hadoop_delete(self.spark, self._live.pop())
+        self._release(keep=0)
         if self.dir is not None:
             jvm = self.spark._jvm
             jpath = jvm.org.apache.hadoop.fs.Path(self.dir)

@@ -1007,124 +1007,127 @@ def _propagate_components(adj_src, ckpt, *, max_iters, stats):
     adj = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    # Round 0 for free: with identity labels, the first propagation's
-    # neighbor-min is just min(adjacent ids) — a plain groupBy, no
-    # label join. This one aggregate replaces BOTH the distinct() that
-    # built identity labels and the first join round (a join + groupBy
-    # + checkpoint + convergence job), and already converges
-    # single-hop components (near-dup cliques usually are).
-    if ckpt.resumed is not None:
-        # driver-loss resume (r11): continue from the newest complete
-        # step of the interrupted run — the rounds are deterministic,
-        # so the fixpoint is the one the crash interrupted. The step
-        # may be the round-0 table (no _chg) or a mid-loop new_labels.
-        labels = ckpt.resumed.drop("_chg")
-    else:
-        labels = ckpt(
-            adj.groupBy("src")
-            .agg(F.least(F.min("dst"), F.col("src")).alias("rep"))
-            .select(F.col("src").alias("id"), "rep")
-        )
-    for it in range(max_iters):
-        neighbor_min = (
-            adj.join(labels, adj["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("rep").alias("_nmin"))
-        )
-        # carry the per-node changed flag through the checkpoint so
-        # convergence detection is a scan of the (already materialized)
-        # labels — not another join job per round
-        # pinned: the shortcut self-join below reads prop twice
-        # (and the edge join + groupBy above is the round's dominant
-        # cost — never compute it twice)
-        prop_plan = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"])
-            .select(
-                "id",
-                F.least("rep", "_nmin").alias("rep"),
-                (F.col("_nmin") < F.col("rep")).alias("_chg"),
+    try:
+        # Round 0 for free: with identity labels, the first propagation's
+        # neighbor-min is just min(adjacent ids) — a plain groupBy, no
+        # label join. This one aggregate replaces BOTH the distinct() that
+        # built identity labels and the first join round (a join + groupBy
+        # + checkpoint + convergence job), and already converges
+        # single-hop components (near-dup cliques usually are).
+        if ckpt.resumed is not None:
+            # driver-loss resume (r11): continue from the newest complete
+            # step of the interrupted run — the rounds are deterministic,
+            # so the fixpoint is the one the crash interrupted. The step
+            # may be the round-0 table (no _chg) or a mid-loop new_labels.
+            labels = ckpt.resumed.drop("_chg")
+        else:
+            labels = ckpt(
+                adj.groupBy("src")
+                .agg(F.least(F.min("dst"), F.col("src")).alias("rep"))
+                .select(F.col("src").alias("id"), "rep")
             )
-        )
-        if it == 0:
-            # First loop round: NO pointer-jumping shortcut (r13).
-            # Round 0's free aggregate already reaches 1 hop and this
-            # round's propagation reaches 2 — near-dup graphs (cliques,
-            # stars, short chains) converge here, and for them the
-            # shortcut is pure overhead: a persist fill plus a
-            # label-side self-join per round, measured 2.47→1.84 s on
-            # the bench minhash graph (same 2 rounds, labels
-            # bit-identical). Deep chains engage the shortcut from the
-            # next round, so rounds stay O(log diameter) (the 256-node
-            # path: 9 rounds vs 8, still well under the test's ≤12 and
-            # max_iters=25).
-            new_labels = ckpt(prop_plan)
-            changed = new_labels.where(F.col("_chg")).limit(1).count()
+        for it in range(max_iters):
+            neighbor_min = (
+                adj.join(labels, adj["dst"] == labels["id"])
+                .groupBy("src")
+                .agg(F.min("rep").alias("_nmin"))
+            )
+            # carry the per-node changed flag through the checkpoint so
+            # convergence detection is a scan of the (already materialized)
+            # labels — not another join job per round
+            # pinned: the shortcut self-join below reads prop twice
+            # (and the edge join + groupBy above is the round's dominant
+            # cost — never compute it twice)
+            prop_plan = (
+                labels.join(neighbor_min, labels["id"] == neighbor_min["src"])
+                .select(
+                    "id",
+                    F.least("rep", "_nmin").alias("rep"),
+                    (F.col("_nmin") < F.col("rep")).alias("_chg"),
+                )
+            )
+            if it == 0:
+                # First loop round: NO pointer-jumping shortcut (r13).
+                # Round 0's free aggregate already reaches 1 hop and this
+                # round's propagation reaches 2 — near-dup graphs (cliques,
+                # stars, short chains) converge here, and for them the
+                # shortcut is pure overhead: a persist fill plus a
+                # label-side self-join per round, measured 2.47→1.84 s on
+                # the bench minhash graph (same 2 rounds, labels
+                # bit-identical). Deep chains engage the shortcut from the
+                # next round, so rounds stay O(log diameter) (the 256-node
+                # path: 9 rounds vs 8, still well under the test's ≤12 and
+                # max_iters=25).
+                new_labels = ckpt(prop_plan)
+                changed = new_labels.where(F.col("_chg")).limit(1).count()
+                labels = new_labels.drop("_chg")
+                if stats is not None:
+                    stats["rounds"] = it + 1
+                if changed == 0:
+                    ckpt.retire_intermediates()
+                    return labels
+                continue
+            # Tax trim (r11 for reliable mode, r12 for local mode): only
+            # lineage TRUNCATION needs the eager round-trip, and only
+            # new_labels crosses rounds — prop is consumed entirely WITHIN
+            # the round, so persist() is enough to not compute it twice,
+            # and its lineage stays rooted at the previous round's
+            # checkpoint: a lost block/executor re-derives at most ONE
+            # round's prop, never the loop, and the plan still stays O(1)
+            # deep (new_labels is checkpointed every round). Cuts the
+            # per-round eager materializations from 2 to 1 in BOTH modes —
+            # reliable measured at 500k (SURVEY §8 r11); local measured at
+            # sf0.1 (the extra localCheckpoint job cost ~1.2-1.5 s of pure
+            # fixed overhead per round on a 100-pair graph, r12).
+            prop = prop_plan.persist()
+            # pointer-jumping shortcut: rep(v) ← rep(rep(v)). rep is
+            # always the id of a node REACHABLE from v (propagation picks
+            # reachable mins, and rep(rep(v)) is reachable by
+            # transitivity), so the fixpoint is untouched while the hop
+            # distance to the component min roughly doubles per round —
+            # O(log diameter) rounds instead of O(diameter). rep is a
+            # node id, so the lookup join always matches (left + coalesce
+            # guards the self-row case cheaply either way).
+            try:
+                rlab = prop.select(
+                    F.col("id").alias("_rid"), F.col("rep").alias("_rrep")
+                )
+                new_labels = ckpt(
+                    prop.join(rlab, prop["rep"] == rlab["_rid"], "left")
+                    .select(
+                        "id",
+                        F.coalesce(
+                            F.least("_rrep", "rep"), F.col("rep")
+                        ).alias("rep"),
+                        (
+                            F.col("_chg") | (F.col("_rrep") < F.col("rep"))
+                        ).alias("_chg"),
+                    )
+                )
+                changed = new_labels.where(F.col("_chg")).limit(1).count()
+            finally:
+                # new_labels is materialized (the ckpt call was eager) —
+                # the round's cached prop is spent in either mode.
+                # finally, so a failed ckpt write / count doesn't leak the
+                # cached RDD for the session (r12, from the r11 ADVICE
+                # low; the caller's except arm only closes files).
+                prop.unpersist()
             labels = new_labels.drop("_chg")
             if stats is not None:
                 stats["rounds"] = it + 1
             if changed == 0:
-                adj.unpersist()
+                # only the last step backs the returned frame — drop the
+                # superseded one so the dir holds exactly the result
                 ckpt.retire_intermediates()
                 return labels
-            continue
-        # Tax trim (r11 for reliable mode, r12 for local mode): only
-        # lineage TRUNCATION needs the eager round-trip, and only
-        # new_labels crosses rounds — prop is consumed entirely WITHIN
-        # the round, so persist() is enough to not compute it twice,
-        # and its lineage stays rooted at the previous round's
-        # checkpoint: a lost block/executor re-derives at most ONE
-        # round's prop, never the loop, and the plan still stays O(1)
-        # deep (new_labels is checkpointed every round). Cuts the
-        # per-round eager materializations from 2 to 1 in BOTH modes —
-        # reliable measured at 500k (SURVEY §8 r11); local measured at
-        # sf0.1 (the extra localCheckpoint job cost ~1.2-1.5 s of pure
-        # fixed overhead per round on a 100-pair graph, r12).
-        prop = prop_plan.persist()
-        # pointer-jumping shortcut: rep(v) ← rep(rep(v)). rep is
-        # always the id of a node REACHABLE from v (propagation picks
-        # reachable mins, and rep(rep(v)) is reachable by
-        # transitivity), so the fixpoint is untouched while the hop
-        # distance to the component min roughly doubles per round —
-        # O(log diameter) rounds instead of O(diameter). rep is a
-        # node id, so the lookup join always matches (left + coalesce
-        # guards the self-row case cheaply either way).
-        try:
-            rlab = prop.select(
-                F.col("id").alias("_rid"), F.col("rep").alias("_rrep")
-            )
-            new_labels = ckpt(
-                prop.join(rlab, prop["rep"] == rlab["_rid"], "left")
-                .select(
-                    "id",
-                    F.coalesce(
-                        F.least("_rrep", "rep"), F.col("rep")
-                    ).alias("rep"),
-                    (
-                        F.col("_chg") | (F.col("_rrep") < F.col("rep"))
-                    ).alias("_chg"),
-                )
-            )
-            changed = new_labels.where(F.col("_chg")).limit(1).count()
-        finally:
-            # new_labels is materialized (the ckpt call was eager) —
-            # the round's cached prop is spent in either mode.
-            # finally, so a failed ckpt write / count doesn't leak the
-            # cached RDD for the session (r12, from the r11 ADVICE
-            # low; the caller's except arm only closes files).
-            prop.unpersist()
-        labels = new_labels.drop("_chg")
-        if stats is not None:
-            stats["rounds"] = it + 1
-        if changed == 0:
-            adj.unpersist()
-            # only the last step backs the returned frame — drop the
-            # superseded one so the dir holds exactly the result
-            ckpt.retire_intermediates()
-            return labels
-    raise RuntimeError(
-        f"duplicate_components did not converge in {max_iters} rounds "
-        "(component diameter exceeds max_iters) — raise max_iters"
-    )
+        raise RuntimeError(
+            f"duplicate_components did not converge in {max_iters} rounds "
+            "(component diameter exceeds max_iters) — raise max_iters"
+        )
+    finally:
+        # spent on return AND on the non-convergence raise (or any
+        # failed round): never leave the adjacency cached
+        adj.unpersist()
 
 
 def _capped_bucket_pairs(

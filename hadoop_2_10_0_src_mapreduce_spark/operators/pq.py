@@ -54,15 +54,17 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_2_10_0_src_mapreduce_spark.sources.readers import local_values_df
-
+from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store
 from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
+    _IVF,
     _global_topk,
     _md5_key,
-    _pin,
+    _resolve_centroids,
+    _resolve_probes,
     _score_pairs_arrow,
     _seq_matdot,
     _seq_sq_norms,
+    train_ivf_centroids,
 )
 
 
@@ -309,8 +311,9 @@ def pq_decode(
     RESIDUAL-encoded rows (``save_ivfpq_index(residual=True)``) must
     pass the index's ``centers`` so the home-list centroid is added
     back — decoding residual codes without it returns near-zero
-    residuals, not vectors (check ``_ivfpq_conf(path)["residual"]``
-    when auditing a stored index)."""
+    residuals, not vectors (check
+    ``ann_store.read_meta(spark, path)["conf"]["residual"]`` when
+    auditing a stored index)."""
     m, _, dsub = codebooks.shape
     bc = codes_df.sparkSession.sparkContext.broadcast((codebooks, centers))
 
@@ -529,20 +532,95 @@ def pq_topk(
     return _global_topk(exact, k)
 
 
-# --- persisted IVF-PQ index: build / serve / append / compact -----------
+# --- persisted IVF-PQ index: the IVF-PQ family of ann_store -------------
 # The 100 TB serving composition: IVF routing prunes the SCAN to the
-# probed list directories (same partition-pruned layout as
-# save_ivf_index) and PQ shrinks what those directories HOLD to m
-# smallints per vector — together a query batch reads p/c of a 32×-
-# smaller store. Tombstone deletes (delete_from_index) and compaction
-# reuse the shared id-based machinery; the layout is
+# probed list directories (the IVF row store) and PQ shrinks what those
+# directories HOLD to m smallints per vector — together a query batch
+# reads p/c of a 32×-smaller store. The layout is
+#   <path>/conf        (n_subspaces, n_codes, n_codes_trained, residual)
 #   <path>/centroids   (list_id, centroid array<double>)   — kilobytes
 #   <path>/codebooks   (subspace, code, codeword array<double>) — ~MB
 #   <path>/lists       (id, pq_codes) PARTITIONED BY list_id
 # Full-precision vectors are NOT stored: rescore-grade serving passes
 # the source-of-truth embedding table via ``rescore=``, and rebuilds
-# re-run save_ivfpq_index over that table (codes are not invertible
-# enough to retrain from).
+# re-run the build over that table (codes are not invertible enough to
+# retrain from).
+
+
+class _IVFPQ(_IVF):
+    """IVF-PQ: the IVF row store holding PQ codes (plain or residual)
+    instead of vectors. Rebuilds swap the whole root, so a reader never
+    pairs new codebooks with old codes."""
+
+    name = "ivfpq"
+    meta = ("conf", "centroids", "codebooks")
+    conf_schema = (
+        "n_subspaces int, n_codes int, n_codes_trained int, residual boolean"
+    )
+    conf_defaults = {"residual": False}
+    root_swap = needs_source = True
+    rebuild_hint = (
+        "cell count; rebuild_ivfpq_index(source_df) — codes cannot "
+        "retrain, so the source embeddings are required"
+    )
+
+    def train(self, corpus, *, id_col, vec_col, train_df=None, dirs="auto",
+              n_centroids=16, n_subspaces=8, n_codes=256, n_iters=5,
+              max_train=4096, residual=False):
+        train = train_df.select(id_col, vec_col) if train_df is not None else corpus
+        # "auto" sizes to the FILED corpus (same rule as save_ivf_index),
+        # capped at this build's trainer sample bound
+        n_centroids = _resolve_centroids(corpus, n_centroids, cap=max_train)
+        cents = train_ivf_centroids(
+            train, id_col=id_col, vec_col=vec_col,
+            n_centroids=n_centroids, max_train=max_train,
+        )
+        books = train_pq_codebooks(
+            train, id_col=id_col, vec_col=vec_col,
+            n_subspaces=n_subspaces, n_codes=n_codes,
+            n_iters=n_iters, max_train=max_train,
+            centers=cents if residual else None,
+        )
+        # conf records the REQUESTED n_codes, not the trained count: a
+        # corpus smaller than n_codes trains a sample-limited codebook
+        # (books.shape[1] < n_codes), and recording that actual count
+        # would permanently pin every later rebuild to the degraded
+        # geometry even after the corpus grows far past it. The trained
+        # count is kept alongside for audits; readers that need the
+        # real codebook shape read the codebooks table itself.
+        conf = {
+            "n_subspaces": int(books.shape[0]),
+            "n_codes": int(n_codes),
+            "n_codes_trained": int(books.shape[1]),
+            "residual": bool(residual),
+        }
+        meta = {"conf": conf, "centroids": cents, "codebooks": books}
+        return meta, ann_store._resolve_list_dirs(dirs, n_centroids)
+
+    def carry(self, meta, geometry):
+        conf = meta["conf"]
+        return {
+            **geometry,
+            "n_centroids": (
+                "auto" if geometry["n_centroids"] is None
+                else geometry["n_centroids"]
+            ),
+            "n_subspaces": conf.get("n_subspaces", 8),
+            "n_codes": conf.get("n_codes", 256),
+            "residual": conf["residual"],
+        }
+
+    def encode(self, filed, meta, *, id_col, vec_col, packed=False):
+        # unpacked by default: parquet dictionary+RLE beats raw bytes on
+        # disk (see pq_encode's measured note); appends follow the store
+        return pq_encode(
+            filed, meta["codebooks"], id_col=id_col, vec_col=vec_col,
+            keep_cols=("list_id",), packed=packed,
+            centers=meta["centroids"] if meta["conf"]["residual"] else None,
+        )
+
+
+IVFPQ = _IVFPQ()
 
 
 def save_ivfpq_index(
@@ -581,113 +659,12 @@ def save_ivfpq_index(
     1516 auto lists). Default "auto" resolves from the list count at
     save time (dirs below 256 lists, flat at or above); maintenance
     follows the stored layout."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _resolve_centroids,
-        _resolve_list_dirs,
-        ivf_assign,
-        train_ivf_centroids,
+    ann_store.build(
+        IVFPQ, emb, path, id_col=id_col, vec_col=vec_col, train_df=train_df,
+        dirs=list_dirs, n_centroids=n_centroids, n_subspaces=n_subspaces,
+        n_codes=n_codes, n_iters=n_iters, max_train=max_train,
+        residual=residual,
     )
-
-    vecs = emb.select(id_col, vec_col)
-    train = train_df.select(id_col, vec_col) if train_df is not None else vecs
-    # "auto" sizes to the FILED corpus (same rule as save_ivf_index),
-    # capped at this build's trainer sample bound
-    n_centroids = _resolve_centroids(vecs, n_centroids, cap=max_train)
-    list_dirs = _resolve_list_dirs(list_dirs, n_centroids)
-    cents = train_ivf_centroids(
-        train, id_col=id_col, vec_col=vec_col,
-        n_centroids=n_centroids, max_train=max_train,
-    )
-    books = train_pq_codebooks(
-        train, id_col=id_col, vec_col=vec_col,
-        n_subspaces=n_subspaces, n_codes=n_codes,
-        n_iters=n_iters, max_train=max_train,
-        centers=cents if residual else None,
-    )
-    spark = emb.sparkSession
-    # conf records the REQUESTED n_codes, not the trained count: a
-    # corpus smaller than n_codes trains a sample-limited codebook
-    # (books.shape[1] < n_codes), and recording that actual count
-    # would permanently pin every later rebuild to the degraded
-    # geometry even after the corpus grows far past it. The trained
-    # count is kept alongside for audits (index_stats / debugging);
-    # readers that need the real codebook shape read the codebooks
-    # table itself (_load_pq_codebooks).
-    # local_values_df (pure-JVM VALUES), not createDataFrame(list):
-    # the pickled-RDD form pays ~cores near-empty Python-worker round
-    # trips per metadata write (guide §4; the join_asof measurement)
-    local_values_df(
-        spark,
-        [(
-            int(books.shape[0]), int(n_codes), int(books.shape[1]),
-            bool(residual),
-        )],
-        "n_subspaces int, n_codes int, n_codes_trained int, "
-        "residual boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/conf")
-    local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    local_values_df(
-        spark,
-        [
-            (s, c, [float(x) for x in books[s, c]])
-            for s in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, codeword array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    home = (
-        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    # unpacked codes: parquet dictionary+RLE beats raw bytes on disk
-    # (see pq_encode's measured note); kernels accept either layout
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _write_ivf_lists,
-    )
-
-    codes = pq_encode(
-        home, books, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",),
-        centers=cents if residual else None,
-    )
-    _write_ivf_lists(codes, path, list_dirs, mode="overwrite")
-
-
-def _ivfpq_conf(spark, path: str) -> dict:
-    """The stored build conf. A missing ``conf`` dir falls back to the
-    ``conf.__old__`` copy a crash inside a pre-r7 rebuild's sequential
-    swap could leave behind (mirroring ``_ivf_list_dirs``'s
-    ``lists.__old__`` fallback) — heal-by-re-run must recover the REAL
-    build contract, never silently default a residual index back to
-    non-residual. Only when neither exists (an index written before
-    the conf file did) does it read as the original non-residual
-    layout."""
-    import pathlib
-
-    for name in ("conf", "conf.__old__"):
-        if (pathlib.Path(path) / name).exists():
-            r = spark.read.parquet(_pin(f"{path}/{name}")).collect()[0]
-            return r.asDict()
-    return {"residual": False}
-
-
-def _load_pq_codebooks(spark, path: str) -> np.ndarray:
-    rows = (
-        spark.read.parquet(_pin(f"{path}/codebooks"))
-        .orderBy("subspace", "code")
-        .collect()
-    )
-    m = max(r.subspace for r in rows) + 1
-    k = max(r.code for r in rows) + 1
-    dsub = len(rows[0].codeword)
-    books = np.empty((m, k, dsub))
-    for r in rows:
-        books[r.subspace, r.code] = np.asarray(r.codeword, dtype=np.float64)
-    return books
 
 
 def query_ivfpq_index(
@@ -726,20 +703,10 @@ def query_ivfpq_index(
     query batch itself (external query ids need not appear in the
     corpus) — returned sims are then true cosines (the index itself
     stores no full-precision vectors to rescore against)."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _apply_tombstones,
-        _load_ivf_centroids,
-        _seq_matdot,
-    )
-
     spark = queries.sparkSession
-    cents = _load_ivf_centroids(spark, path)
-    books = _load_pq_codebooks(spark, path)
-    residual = _ivfpq_conf(spark, path)["residual"]
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _resolve_probes,
-    )
-
+    pins = ann_store.pin(path, IVFPQ)
+    meta = ann_store.read_meta(spark, path, IVFPQ, pins)
+    cents, books = meta["centroids"], meta["codebooks"]
     n_probe = _resolve_probes(len(cents), n_probe)
     qids, qmat = _collect_query_batch(
         queries, id_col, vec_col, max_queries, "query_ivfpq_index"
@@ -752,10 +719,8 @@ def query_ivfpq_index(
     for i in range(len(qids)):
         probe_ok[i, order[i]] = True
     probed = sorted(int(x) for x in np.unique(order))
-    stored = _apply_tombstones(
-        spark.read.parquet(_pin(f"{path}/lists")).where(
-            F.col("list_id").isin(probed)
-        ),
+    stored = ann_store.without_tombstones(
+        spark.read.parquet(pins["lists"]).where(F.col("list_id").isin(probed)),
         path,
         id_col,
     )
@@ -766,7 +731,7 @@ def query_ivfpq_index(
         id_col=id_col, codes_col="pq_codes",
         n_cand=n_cand, round_digits=round_digits,
         probe_ok=probe_ok,
-        list_offsets=q_dot_c if residual else None,
+        list_offsets=q_dot_c if meta["conf"]["residual"] else None,
     )
     if rescore is None:
         return _global_topk(per_part, k)
@@ -789,41 +754,12 @@ def append_to_ivfpq_index(
     retraining: centroids AND codebooks stay fixed (the PQ analogue of
     the fixed-partition-function contract — re-deriving codebooks
     would silently re-mean every stored code), the batch assigns to
-    home lists and encodes under the stored codebooks, and the filed
-    codes append to the list partitions. Equals a fresh
-    ``save_ivfpq_index(union, train_df=original)`` bit for bit (pinned
-    by test). Same novel-id contract as the IVF/LSH appends: tombstone
-    first to update."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _load_ivf_centroids,
-        ivf_assign,
-    )
-
-    spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(spark, path)
-    books = _load_pq_codebooks(spark, path)
-    home = (
-        ivf_assign(
-            new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
-            n_probe=1, keep_vec=True,
-        )
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    stored_schema = spark.read.parquet(_pin(f"{path}/lists")).schema
-    stored_packed = stored_schema["pq_codes"].dataType.simpleString() == "binary"
-    residual = _ivfpq_conf(spark, path)["residual"]
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _ivf_list_dirs,
-        _write_ivf_lists,
-    )
-
-    codes = pq_encode(
-        home, books, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",),
-        packed=stored_packed,
-        centers=cents if residual else None,
-    )
-    _write_ivf_lists(codes, path, _ivf_list_dirs(path), mode="append")
+    home lists and encodes under the stored codebooks (packed iff the
+    stored codes are), and the filed codes append to the list
+    partitions. Equals a fresh ``save_ivfpq_index(union,
+    train_df=original)`` bit for bit (pinned by test). Same novel-id
+    contract as the IVF/LSH appends: tombstone first to update."""
+    ann_store.append(IVFPQ, new_emb, path, id_col=id_col, vec_col=vec_col)
 
 
 def rebuild_ivfpq_index(
@@ -843,86 +779,32 @@ def rebuild_ivfpq_index(
     (quantization already threw the detail away), so unlike
     ``rebuild_ivf_index`` the source table is REQUIRED; everything
     else mirrors it: tombstoned ids are excluded (the rebuild IS a
-    compaction — the tombstone dir is dropped), the stored conf's
-    n_subspaces / n_codes / residual carry over so a rebuild can't
-    silently fork the index's quality contract, and ``n_centroids``
-    defaults to "auto" (re-size to the live corpus).
+    compaction), the stored conf's n_subspaces / n_codes / residual
+    carry over so a rebuild can't silently fork the index's quality
+    contract, and ``n_centroids`` defaults to "auto" (re-size to the
+    live corpus).
 
     The fresh index builds in a sibling ``.__rebuild__`` dir and swaps
     in with ONE top-level rename of the index root (marked complete by
     a ``__complete__`` file written after the last subdir lands), so a
     concurrent reader can never see NEW codebooks under OLD codes or
-    any other mixed-subdir state — the pre-r7 per-subdir swap loop had
-    exactly that window, silently skewing ADC candidate ranking. The
-    one remaining reader-visible state is the whole-index ENOENT blink
-    between the two renames (the documented ``atomic_swap_write``
-    contract). A crash anywhere is healed by re-running the rebuild:
-    roll FORWARD when the sibling build completed, roll BACK to the
-    ``.__old__`` root otherwise. Note: because the whole root is
-    rebuilt fresh, a lists dir converted with ``enable_pointer_swaps``
-    comes back as a REAL directory — re-run ``index pointer`` after an
-    ivfpq rebuild if compact-while-serving is needed (the IVF/LSH
-    rebuilds swap subdirs in place and KEEP pointer mode)."""
-    import pathlib
-    import shutil
-
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _ivf_list_dirs,
-        _tombstone_df,
+    any other mixed-subdir state. The one remaining reader-visible
+    state is the whole-index ENOENT blink between the two renames (the
+    documented ``atomic_swap_write`` contract). A crash anywhere is
+    healed by re-running the rebuild: roll FORWARD when the sibling
+    build completed, roll BACK to the ``.__old__`` root otherwise.
+    Because the whole root is rebuilt fresh, a lists dir converted with
+    ``enable_pointer_swaps`` comes back as a REAL directory — re-run
+    ``index pointer`` after an ivfpq rebuild if compact-while-serving
+    is needed (the IVF/LSH rebuilds swap subdirs in place and KEEP
+    pointer mode)."""
+    ann_store.rebuild(
+        IVFPQ, spark, path, corpus=source_df, id_col=id_col, vec_col=vec_col,
+        n_centroids=n_centroids, n_iters=n_iters, max_train=max_train,
     )
-
-    p = pathlib.Path(path)
-    tmp = f"{path}.__rebuild__"
-    old = f"{path}.__old__"
-    done = pathlib.Path(tmp) / "__complete__"
-    if not p.exists():
-        # heal a crash inside a previous rebuild's swap window
-        if done.exists():
-            shutil.move(tmp, path)  # roll forward: fresh build is whole
-        elif pathlib.Path(old).exists():
-            shutil.move(old, path)  # roll back: build never finished
-        else:
-            raise FileNotFoundError(
-                f"rebuild_ivfpq_index: no index at {path} and no "
-                "recoverable .__rebuild__/.__old__ sibling"
-            )
-    (p / "__complete__").unlink(missing_ok=True)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    conf = _ivfpq_conf(spark, path)
-    list_dirs = _ivf_list_dirs(path)
-    live = source_df.select(id_col, vec_col)
-    tomb = _tombstone_df(spark, path)
-    if tomb is not None:
-        live = live.join(
-            tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-        )
-    save_ivfpq_index(
-        live, tmp, id_col=id_col, vec_col=vec_col,
-        n_centroids="auto" if n_centroids is None else n_centroids,
-        n_subspaces=conf.get("n_subspaces", 8),
-        n_codes=conf.get("n_codes", 256),
-        n_iters=n_iters, max_train=max_train,
-        residual=conf["residual"],
-        list_dirs=list_dirs,
-    )
-    done.touch()
-    # single top-level swap: rename is atomic per directory, so readers
-    # see the OLD index, ENOENT, or the NEW index — never a mix
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    (p / "__complete__").unlink(missing_ok=True)
-    shutil.rmtree(old)  # tombstones ride out with the old root
 
 
 def compact_ivfpq_index(spark, path: str) -> None:
-    """Physically apply tombstones and defragment the code store —
-    the PQ codes layout satisfies ``compact_ivf_index``'s layout
-    detection (the id column is the only scalar outside the layout),
-    so this is the same atomic-swap rewrite."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        compact_ivf_index,
-    )
-
-    compact_ivf_index(spark, path)
+    """Physically apply tombstones and defragment the code store — the
+    same atomic-swap row-store rewrite as every family."""
+    ann_store.compact(IVFPQ, spark, path)

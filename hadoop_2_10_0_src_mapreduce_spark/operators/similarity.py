@@ -64,37 +64,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store
+from hadoop_2_10_0_src_mapreduce_spark.operators.ann_store import (  # noqa: F401
+    delete_from_index,
+    index_stats,
+    maintain_index,
+)
 from hadoop_2_10_0_src_mapreduce_spark.sources.readers import local_values_df
-
-
-def _pin(path: str) -> str:
-    """Generation-pin an index subdirectory before scanning it (see
-    ``sources.writers.pin_generation``): on a pointer-mode dir this
-    returns the concrete ``.__gen_N__`` path so the scan's file
-    listing survives a concurrent ``atomic_swap_write`` — the grace
-    generation is kept on disk but only protects readers whose plans
-    hold the pinned paths, not link-relative ones (the r10
-    serve-during-compaction ENOENT race). No-op on plain dirs, so
-    every reader calls it unconditionally."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        pin_generation,
-    )
-
-    return pin_generation(path)
-
-
-def _pin_index(path: str, names: tuple[str, ...]) -> dict[str, str]:
-    """Consistent multi-subdirectory pin for one logical index (see
-    ``sources.writers.pin_generations``): serving readers that scan
-    two or more subdirectories in one query (centroids+lists,
-    conf+buckets) must pin them as a SET, or a rebuild's sequential
-    swaps landing between the pins serve mixed generations — silently
-    wrong neighbors, not an ENOENT (the r11 ADVICE low)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        pin_generations,
-    )
-
-    return pin_generations(path, names)
 
 
 # --- adaptive geometry (the sf1 scaling-gate fix) ---------------------
@@ -1796,61 +1772,159 @@ def semantic_dedup(
     return duplicate_components(pairs)
 
 
-# layout crossover, measured (SURVEY §8): directory-per-list pruning
-# beats row-group skipping at small list counts, but past a few
-# hundred lists directory listing + per-dir file overhead dominate
-# serves (ann_bench at 1516 lists: flat = 2.3× serve, and the same
-# lesson at 16×1024 LSH buckets: 13×). 256 sits safely below where
-# the dir layout was measured losing and above every fixture geometry.
-FLAT_LISTS_THRESHOLD = 256
+# --- persisted indexes: the IVF and LSH families of ann_store -----------
 
 
-def _resolve_list_dirs(list_dirs, n_lists: int) -> bool:
-    """Resolve the ``list_dirs`` dial: "auto" (the save-time default)
-    picks directory-per-list below ``FLAT_LISTS_THRESHOLD`` lists and
-    the flat list_id-sorted layout at or above it. Explicit True/False
-    always win — the override for individually-huge lists (dirs) or
-    benchmarking (flat). Rebuild/append/compact FOLLOW the stored
-    layout (``_ivf_list_dirs`` detection) rather than re-resolving, so
-    maintenance never silently rewrites a layout the operator chose;
-    re-save to change it."""
-    if list_dirs == "auto":
-        return n_lists < FLAT_LISTS_THRESHOLD
-    return list_dirs
+class _IVF(ann_store.Family):
+    """IVF: the corpus filed into home lists under md5-seeded k-means
+    centroids; a float or int8 payload per row."""
+
+    name, rows, part_cols, meta = "ivf", "lists", ("list_id",), ("centroids",)
+    geometry = ("n_centroids",)
+    compactor = "compact_ivf_index"
+    target = CELL_TARGET
+    rebuild_hint = "cell count; rebuild_ivf_index(n_centroids='auto')"
+    skew_note = (
+        "retrain: hottest partition holds {skew:.1f}x the mean — "
+        "centroids no longer fit the data"
+    )
+
+    def train(self, corpus, *, id_col, vec_col, train_df=None, dirs="auto",
+              n_centroids=16, n_iters=5, max_train=4096):
+        n_centroids = _resolve_centroids(corpus, n_centroids, cap=max_train)
+        cents = train_ivf_centroids(
+            train_df.select(id_col, vec_col) if train_df is not None else corpus,
+            id_col=id_col,
+            vec_col=vec_col,
+            n_centroids=n_centroids,
+            n_iters=n_iters,
+            max_train=max_train,
+        )
+        return {"centroids": cents}, ann_store._resolve_list_dirs(dirs, n_centroids)
+
+    def carry(self, meta, geometry):
+        if geometry["n_centroids"] is None:
+            geometry = {**geometry, "n_centroids": len(meta["centroids"])}
+        return geometry
+
+    def assign(self, vecs, meta, *, id_col, vec_col):
+        return (
+            ivf_assign(vecs, meta["centroids"], vec_col=vec_col, n_probe=1,
+                       keep_vec=True)
+            .where(F.col("probe_rank") == 0)
+            .drop("probe_rank")
+        )
 
 
-def _ivf_list_dirs(path: str) -> bool:
-    """The stored lists layout: directory-per-list (original) vs flat
-    (partitionless, list_id-sorted files — same trade as the LSH
-    flat layout). Detected from the directory shape, so pre-layout
-    indexes and every maintenance op agree without a conf change.
-    A missing lists dir (a crash inside a rebuild's swap window)
-    falls back to the ``.__old__`` copy's shape, then to the default
-    directory layout — heal-by-re-run must not die on detection."""
-    import pathlib
+class _LSH(ann_store.Family):
+    """LSH: the capped (table, bucket) memberships of md5-plane
+    signatures, a vector copy per membership row. The planes are never
+    stored — the conf row re-derives them bit-identically."""
 
-    for name in ("lists", "lists.__old__"):
-        lists = pathlib.Path(path) / name
-        if lists.exists():
-            return any(
-                d.name.startswith("list_id=")
-                for d in lists.iterdir()
-                if d.is_dir()
-            )
-    return True
+    name, rows, part_cols, meta = "lsh", "buckets", ("table_idx", "bucket"), ("conf",)
+    conf_schema = (
+        "n_planes int, n_tables int, dim int, max_bucket int, bucket_dirs boolean"
+    )
+    copies = True
+    geometry = ("n_tables", "n_planes", "max_bucket")
+    compactor = "compact_lsh_index"
+    target = LSH_TARGET_BUCKET
+    rebuild_hint = "bit count; rebuild_lsh_index(n_planes='auto')"
+    skew_note = (
+        "compact: hottest bucket holds {skew:.1f}x the mean — "
+        "re-apply the global bucket cap"
+    )
+
+    def train(self, corpus, *, id_col, vec_col, train_df=None, dirs=False,
+              n_planes=6, n_tables="auto", max_bucket=1024, dim=None):
+        n_planes = int(_resolve_planes(corpus, n_planes))
+        if dim is None:  # the vectors' width, read from the first row
+            first = corpus.select(F.size(vec_col)).first()
+            if first is None:
+                raise ValueError("cannot read the vector width of an empty corpus")
+            dim = first[0]
+        conf = {
+            "n_planes": n_planes,
+            "n_tables": int(_resolve_tables(n_planes, n_tables)),
+            "dim": int(dim),
+            "max_bucket": int(max_bucket),
+            "bucket_dirs": bool(dirs),
+        }
+        return {"conf": conf}, bool(dirs)
+
+    def carry(self, meta, geometry):
+        conf = meta["conf"]
+        return {"dim": conf["dim"], **{
+            k: conf[k] if v is None else v for k, v in geometry.items()
+        }}
+
+    def assign(self, vecs, meta, *, id_col, vec_col):
+        conf = meta["conf"]
+        return capped_lsh_buckets(
+            vecs,
+            id_col=id_col,
+            vec_col=vec_col,
+            n_planes=conf["n_planes"],
+            n_tables=conf["n_tables"],
+            dim=conf["dim"],
+            max_bucket=conf["max_bucket"],
+        ).join(vecs, id_col)
+
+    def recap(self, spark, path, rows, id_col):
+        # appends cap each batch alone, so a bucket hot across appends
+        # can overfill: re-apply the GLOBAL cap — smallest (md5(id), id)
+        # per (table, bucket), the rule capped_lsh_buckets applies at
+        # build time (the input is ≤ appends·max_bucket rows per bucket,
+        # already capped per batch, so one window level is no skew
+        # funnel). See append_to_lsh_index for why this equals the
+        # build-once membership.
+        cap = ann_store.read_meta(spark, path, self)["conf"]["max_bucket"]
+        w = Window.partitionBy("table_idx", "bucket").orderBy("_capkey", id_col)
+        return (
+            rows.withColumn("_capkey", F.md5(F.col(id_col).cast("string")))
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") <= cap)
+            .drop("_rn", "_capkey")
+        )
+
+    def advise(self, spark, path, pins, recall_target, rec):
+        conf = ann_store.read_meta(spark, path, self, pins)["conf"]
+        advisor = multiprobe_advisor(
+            int(conf["n_planes"]), int(conf["n_tables"]),
+            recall_target=recall_target,
+        )
+        if advisor["deficit"] > 0:
+            cur, pick = advisor["current"], advisor["pick"]
+            if recall_target is not None and pick["measured"]:
+                # the advisor's priced pick as a NAMED maintenance
+                # action with its cost multipliers attached —
+                # maintain_index surfaces this verbatim (rebuilds stay
+                # operator-applied)
+                rec.append(
+                    f"recall-rebuild: rebuild_lsh_index(n_tables="
+                    f"{pick['n_tables']}) then serve with n_multiprobe="
+                    f"{pick['flips']} reaches measured recall"
+                    f"≈{pick['recall']} at the {recall_target} target "
+                    f"(store ×{pick['store_multiplier']}, candidate "
+                    f"reads ×{pick['probe_volume_multiplier']}; anchor: "
+                    f"{advisor['anchor_geometry']['sweep']})"
+                )
+            else:
+                rec.append(
+                    f"recall: stored geometry is {advisor['deficit']} "
+                    "table-doubling(s) short of the "
+                    f"{int(conf['n_planes'])}-bit rule — serve with "
+                    f"n_multiprobe={cur.get('flips')} (candidate reads "
+                    f"×{1 << int(cur.get('flips', 0))}, store ×1) or "
+                    f"rebuild with n_tables={pick['n_tables']} (store "
+                    f"×{pick['store_multiplier']}, reads ~flat); "
+                    "multiprobe_advisor(recall_target=...) prices every "
+                    "split"
+                )
+        return advisor
 
 
-def _write_ivf_lists(
-    filed: DataFrame, path: str, list_dirs: bool, *, mode: str
-) -> None:
-    if list_dirs:
-        filed.repartition("list_id").write.mode(mode).partitionBy(
-            "list_id"
-        ).parquet(f"{path}/lists")
-    else:
-        filed.repartition("list_id").sortWithinPartitions(
-            "list_id"
-        ).write.mode(mode).parquet(f"{path}/lists")
+IVF, LSH = _IVF(), _LSH()
 
 
 def save_ivf_index(
@@ -1907,45 +1981,17 @@ def save_ivf_index(
     list_id-sorted file set where the probed-list IN filter skips via
     sorted parquet row-group stats; the trade the LSH flat layout
     measured at 13×, SURVEY §8). The default "auto" resolves from the
-    list count at save time (``_resolve_list_dirs``: dirs below
-    {FLAT_LISTS_THRESHOLD}=256 lists, flat at or above — the measured
-    crossover), so an adaptive-geometry build at scale gets the fast
-    layout WITHOUT the operator knowing the dial exists. Maintenance
-    ops follow the stored layout from the directory shape."""
-    n_centroids = _resolve_centroids(emb, n_centroids, cap=max_train)
-    list_dirs = _resolve_list_dirs(list_dirs, n_centroids)
-    vecs = emb.select(id_col, vec_col)
-    cents = train_ivf_centroids(
-        train_df.select(id_col, vec_col) if train_df is not None else vecs,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        n_iters=n_iters,
-        max_train=max_train,
+    list count at save time (dirs below
+    ``ann_store.FLAT_LISTS_THRESHOLD``=256 lists, flat at or above —
+    the measured crossover), so an adaptive-geometry build at scale
+    gets the fast layout WITHOUT the operator knowing the dial exists.
+    Maintenance ops follow the stored layout from the directory
+    shape."""
+    ann_store.build(
+        IVF, emb, path, id_col=id_col, vec_col=vec_col, quantize=quantize,
+        train_df=train_df, dirs=list_dirs, n_centroids=n_centroids,
+        n_iters=n_iters, max_train=max_train,
     )
-    spark = emb.sparkSession
-    # local_values_df, not createDataFrame(list): the pickled-RDD form
-    # pays ~cores near-empty Python-worker round trips per save (guide
-    # §4; the join_asof measurement) — the VALUES relation is pure JVM
-    cent_df = local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    )
-    cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    home = (
-        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    if quantize:
-        home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
-        )
-    # cluster the write by the partition column: one task owns each
-    # list, so each directory gets ONE file set instead of one per
-    # shuffle task (the small-files debt index_stats would later flag)
-    _write_ivf_lists(home, path, list_dirs, mode="overwrite")
 
 
 def query_ivf_index(
@@ -1977,13 +2023,8 @@ def query_ivf_index(
     (module caching contract); a serving loop should
     ``spark.catalog.clearCache()`` between batches it is done with."""
     spark = queries.sparkSession
-    pins = _pin_index(path, ("centroids", "lists"))
-    cent_rows = (
-        spark.read.parquet(pins["centroids"]).orderBy("list_id").collect()
-    )
-    cents = np.stack(
-        [np.asarray(r.centroid, dtype=np.float64) for r in cent_rows]
-    )
+    pins = ann_store.pin(path, IVF)
+    cents = ann_store.read_meta(spark, path, IVF, pins)["centroids"]
     n_probe = _resolve_probes(len(cents), n_probe)
     fan = ivf_assign(
         queries.select(id_col, vec_col),
@@ -2000,25 +2041,14 @@ def query_ivf_index(
     probed = sorted(
         r.list_id for r in fan.select("list_id").distinct().collect()
     )
-    stored = _apply_tombstones(
-        spark.read.parquet(pins["lists"]).where(
-            F.col("list_id").isin(probed)
-        ),
+    stored = ann_store.without_tombstones(
+        spark.read.parquet(pins["lists"]).where(F.col("list_id").isin(probed)),
         path,
         id_col,
     )
     quantized = "qvec" in stored.columns
-    if quantized:  # int8 index: dequantize in the scan projection
-        stored = stored.select(
-            F.col(id_col),
-            F.transform(
-                "qvec", lambda q: q.cast("double") * F.col("scale")
-            ).alias(vec_col),
-            "list_id",
-        )
-    lists = (
-        stored.withColumn("probe_rank", F.lit(0))
-        .select(id_col, vec_col, "list_id", "probe_rank")
+    lists = ann_store.decode(stored, id_col, vec_col, ("list_id",)).withColumn(
+        "probe_rank", F.lit(0)
     )
     fan_sel = fan.select(id_col, vec_col, "list_id", "probe_rank")
     if quantized:
@@ -2048,7 +2078,6 @@ def save_lsh_index(
     vec_col: str = "embedding",
     n_planes: int | str = 6,
     n_tables: int | str = "auto",
-    dim: int = 64,
     max_bucket: int = 1024,
     quantize: bool = False,
     bucket_dirs: bool = False,
@@ -2059,7 +2088,8 @@ def save_lsh_index(
     - ``<path>/conf`` — one row of (n_planes, n_tables, dim,
       max_bucket, bucket_dirs): the hyperplanes themselves need NO
       storage — they are md5-derived (``md5_planes``), so the server
-      recomputes them bit-identically from the conf alone.
+      recomputes them bit-identically from the conf alone. ``dim`` is
+      the vectors' width, read from the corpus.
     - ``<path>/buckets`` — the capped bucket memberships WITH a vector
       copy per membership row. DEFAULT layout (``bucket_dirs=False``):
       parquet PARTITIONED BY table_idx only, rows SORTED by bucket
@@ -2071,8 +2101,8 @@ def save_lsh_index(
       read-bound at adaptive geometry: 16·2¹⁰ = 16k tiny directories
       made a bare count() of a 20k-vector index take 37 s and serving
       35 s; the flat layout reads the same probe set in ~1 s (numbers
-      in SURVEY §8). Pre-existing indexes (conf without the column)
-      read as bucket_dirs=True.
+      in SURVEY §8). Maintenance reads the layout from the directory
+      shape, so confs written before the column existed keep working.
 
     ``quantize=True`` stores int8 qvec + per-vector scale instead of
     the float vector — offsets the L-fold copy cost 4–8×; the server
@@ -2088,60 +2118,11 @@ def save_lsh_index(
     ≤ 10-bit geometry) so serving recall doesn't collapse as bits
     rise; the RESOLVED counts are what the conf row stores, so
     serving and appends replay them exactly."""
-    n_planes = _resolve_planes(emb, n_planes)
-    n_tables = _resolve_tables(n_planes, n_tables)
-    spark = emb.sparkSession
-    local_values_df(
-        spark,
-        [(n_planes, n_tables, dim, max_bucket, bool(bucket_dirs))],
-        "n_planes int, n_tables int, dim int, max_bucket int, "
-        "bucket_dirs boolean",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/conf")
-    capped = capped_lsh_buckets(
-        emb,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        dim=dim,
+    ann_store.build(
+        LSH, emb, path, id_col=id_col, vec_col=vec_col, quantize=quantize,
+        dirs=bucket_dirs, n_planes=n_planes, n_tables=n_tables,
         max_bucket=max_bucket,
     )
-    stored = capped.join(emb.select(id_col, vec_col), id_col)
-    if quantize:
-        stored = quantize_embeddings(
-            stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
-        )
-    _write_lsh_buckets(stored, path, bucket_dirs, mode="overwrite")
-
-
-def _lsh_bucket_dirs(conf_row) -> bool:
-    """The stored bucket layout; confs written before the column
-    existed are the original per-(table, bucket) directory layout."""
-    try:
-        return bool(conf_row.bucket_dirs)
-    except AttributeError:
-        return True
-
-
-def _write_lsh_buckets(
-    stored: DataFrame, path: str, bucket_dirs: bool, *, mode: str
-) -> None:
-    if bucket_dirs:
-        stored.repartition("table_idx", "bucket").write.mode(
-            mode
-        ).partitionBy("table_idx", "bucket").parquet(f"{path}/buckets")
-    else:
-        # sort by (table_idx, bucket): the file writer requires output
-        # ordered by the partition column and would otherwise insert
-        # its OWN Sort(table_idx), leaving bucket order to sort
-        # stability — an implementation detail, not a contract, and
-        # the row-group skip silently dies without the order
-        stored.repartition("table_idx").sortWithinPartitions(
-            "table_idx", "bucket"
-        ).write.mode(mode).partitionBy("table_idx").parquet(
-            f"{path}/buckets"
-        )
 
 
 def query_lsh_index(
@@ -2186,16 +2167,16 @@ def query_lsh_index(
     contract); a serving loop should ``spark.catalog.clearCache()``
     between batches it is done with."""
     spark = queries.sparkSession
-    pins = _pin_index(path, ("conf", "buckets"))
-    conf = spark.read.parquet(pins["conf"]).collect()[0]
-    planes = md5_planes(conf.n_tables, conf.n_planes, conf.dim)
+    pins = ann_store.pin(path, LSH)
+    conf = ann_store.read_meta(spark, path, LSH, pins)["conf"]
+    planes = md5_planes(conf["n_tables"], conf["n_planes"], conf["dim"])
     if n_multiprobe == "auto":
-        n_multiprobe = adaptive_multiprobe(conf.n_planes, conf.n_tables)
+        n_multiprobe = adaptive_multiprobe(conf["n_planes"], conf["n_tables"])
     qsig = lsh_signatures(
         queries.select(id_col, vec_col),
         vec_col=vec_col,
-        n_planes=conf.n_planes,
-        n_tables=conf.n_tables,
+        n_planes=conf["n_planes"],
+        n_tables=conf["n_tables"],
         planes=planes,
         n_flip=int(n_multiprobe),
     ).persist()
@@ -2245,16 +2226,10 @@ def query_lsh_index(
         raw = raw.join(
             F.broadcast(pairs_df), ["table_idx", "bucket"], "left_semi"
         )
-    stored = _apply_tombstones(raw, path, id_col)
-    if "qvec" in stored.columns:  # int8 index: dequantize in the scan
-        stored = stored.select(
-            F.col(id_col),
-            F.transform(
-                "qvec", lambda q: q.cast("double") * F.col("scale")
-            ).alias(vec_col),
-            "table_idx",
-            "bucket",
-        )
+    stored = ann_store.decode(
+        ann_store.without_tombstones(raw, path, id_col), id_col, vec_col,
+        ("table_idx", "bucket"),
+    )
     cands = (
         qsig.select(F.col(id_col).alias("query_id"), "table_idx", "bucket")
         .join(
@@ -2281,65 +2256,13 @@ def query_lsh_index(
     return _global_topk(scored, k)
 
 
-# --- index maintenance: append / delete / compact ----------------------
-# The serving lifecycle past build-once: fold new vector batches into an
-# existing index WITHOUT retraining or rewriting it, tombstone deletes
-# so queries stop returning removed ids immediately, and compact to
-# physically drop tombstoned rows (and, for LSH, re-apply the global
-# bucket cap) off the ingest path. All paths are local/NFS table dirs,
-# the same documented scope as sources.writers.compact_table.
-
-
-def _load_ivf_centroids(spark: SparkSession, path: str) -> np.ndarray:
-    rows = spark.read.parquet(_pin(f"{path}/centroids")).orderBy("list_id").collect()
-    return np.stack([np.asarray(r.centroid, dtype=np.float64) for r in rows])
-
-
-def _index_id_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
-    """The id column of a stored index frame: the first SCALAR column
-    that is not part of the layout (vector payloads are arrays, so
-    excluding array types makes this independent of column order)."""
-    return next(
-        f.name
-        for f in df.schema.fields
-        if f.name not in layout_cols
-        and not f.name.startswith("_")
-        and not f.dataType.simpleString().startswith("array")
-    )
-
-
-def _index_vec_col(df: DataFrame, layout_cols: tuple[str, ...]) -> str:
-    """The stored float-vector column of an index frame: the
-    array-typed field outside the layout, excluding the quantized
-    payload (``qvec``) — the mirror of ``_index_id_col``, so
-    maintenance ops work on indexes saved with a custom ``vec_col``
-    (the CLI passes none) instead of assuming the default name."""
-    return next(
-        f.name
-        for f in df.schema.fields
-        if f.name not in layout_cols
-        and f.name != "qvec"
-        and f.dataType.simpleString().startswith("array")
-    )
-
-
-def _tombstone_df(spark: SparkSession, path: str):
-    """The tombstoned-id frame, or None when no deletes exist."""
-    import pathlib
-
-    tomb = pathlib.Path(path) / "tombstones"
-    if not tomb.exists():
-        return None
-    return spark.read.parquet(_pin(str(tomb))).select("id").distinct()
-
-
-def _apply_tombstones(stored: DataFrame, path: str, id_col: str) -> DataFrame:
-    tomb = _tombstone_df(stored.sparkSession, path)
-    if tomb is None:
-        return stored
-    return stored.join(
-        tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-    )
+# --- index maintenance: append / delete / compact / rebuild ------------
+# The serving lifecycle past build-once, all through ann_store: fold new
+# vector batches into an existing index WITHOUT retraining or rewriting
+# it, tombstone deletes (``delete_from_index``) so queries stop
+# returning removed ids immediately, compact to physically drop
+# tombstoned rows off the ingest path, and rebuild to retrain.
+# ``index_stats`` / ``maintain_index`` measure and apply the debt.
 
 
 def append_to_ivf_index(
@@ -2350,12 +2273,11 @@ def append_to_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Fold a NEW vector batch into an existing ``save_ivf_index``
-    directory WITHOUT retraining: load the kilobyte centroid table,
-    assign each new vector to its home list with the same stable
-    argmax as the original build, and APPEND the filed rows to the
-    list partitions (quantizing iff the stored index is quantized —
-    detected from the stored schema, so callers can't fork the
-    layout).
+    directory WITHOUT retraining: assign each new vector to its home
+    list with the same stable argmax as the original build and APPEND
+    the filed rows to the list partitions, in the stored payload
+    (quantized iff the index is; floats cast to the stored element
+    type), so callers can't fork the layout.
 
     Centroids stay FIXED — that is the IVF contract under growth: the
     partition function must not move, or every stored vector's home
@@ -2363,45 +2285,20 @@ def append_to_ivf_index(
     trains on the ORIGINAL corpus and files the union
     (``save_ivf_index(union, train_df=original)``) — pinned
     bit-for-bit by test. Under real distribution drift the quality
-    answer is a periodic retrain-and-rebuild (new index dir + swap),
-    not incremental centroid updates, which would silently invalidate
-    the existing lists.
+    answer is ``rebuild_ivf_index``, not incremental centroid updates,
+    which would silently invalidate the existing lists.
 
     Scale shape: one assignment pass over the BATCH only (the stored
     corpus is never read or rewritten), appended as new parquet files
     per touched list partition. Many small appends accumulate small
-    files — run ``compact_ivf_index`` from the maintenance schedule,
-    exactly like the streaming dedup index.
+    files — run ``compact_ivf_index`` from the maintenance schedule.
 
     Append assumes NOVEL ids: re-appending an existing id stores a
     second copy (compaction does not merge copies — it cannot know
     which vector is current). To UPDATE a vector,
     ``delete_from_index`` the id first, then append; the tombstone
     hides the old copy immediately and compaction removes it."""
-    spark = new_emb.sparkSession
-    cents = _load_ivf_centroids(spark, path)
-    home = (
-        ivf_assign(
-            new_emb.select(id_col, vec_col), cents, vec_col=vec_col,
-            n_probe=1, keep_vec=True,
-        )
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    stored_schema = spark.read.parquet(_pin(f"{path}/lists")).schema
-    if "qvec" in stored_schema.fieldNames():
-        home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
-        )
-    else:
-        # cast the batch's vector payload to the STORED element type:
-        # appending array<double> files into an array<float> index
-        # would fork the parquet physical schema and fail every
-        # subsequent read of the mixed partition
-        home = home.withColumn(
-            vec_col, F.col(vec_col).cast(stored_schema[vec_col].dataType)
-        )
-    _write_ivf_lists(home, path, _ivf_list_dirs(path), mode="append")
+    ann_store.append(IVF, new_emb, path, id_col=id_col, vec_col=vec_col)
 
 
 def append_to_lsh_index(
@@ -2413,10 +2310,9 @@ def append_to_lsh_index(
 ) -> None:
     """Fold a NEW vector batch into an existing ``save_lsh_index``
     directory: re-derive the md5 hyperplanes from the stored conf
-    (planes are never stored — same conf, bit-identical planes),
-    bucket the batch with the hot-bucket cap applied to the BATCH
-    alone, and append the memberships to the (table_idx, bucket)
-    partitions, quantizing iff the stored index is quantized.
+    (same conf, bit-identical planes), bucket the batch with the
+    hot-bucket cap applied to the BATCH alone, and append the
+    memberships in the stored layout and payload.
 
     Because each append caps only its own batch, a bucket hot across
     many appends can exceed ``max_bucket`` rows on disk;
@@ -2431,386 +2327,26 @@ def append_to_lsh_index(
     stays correct with duplicate memberships (candidates and vectors
     dedupe by id at query time) but storage grows; for updates,
     tombstone the id first, then append."""
-    spark = new_emb.sparkSession
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
-    capped = capped_lsh_buckets(
-        new_emb,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_planes=conf.n_planes,
-        n_tables=conf.n_tables,
-        dim=conf.dim,
-        max_bucket=conf.max_bucket,
-    )
-    stored = capped.join(new_emb.select(id_col, vec_col), id_col)
-    bucket_schema = spark.read.parquet(_pin(f"{path}/buckets")).schema
-    if "qvec" in bucket_schema.fieldNames():
-        stored = quantize_embeddings(
-            stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
-        )
-    else:
-        # same stored-type cast as the IVF twin: never fork the
-        # partition files' physical vector type
-        stored = stored.withColumn(
-            vec_col, F.col(vec_col).cast(bucket_schema[vec_col].dataType)
-        )
-    _write_lsh_buckets(stored, path, _lsh_bucket_dirs(conf), mode="append")
-
-
-def delete_from_index(
-    spark: SparkSession,
-    path: str,
-    ids,
-    *,
-    id_col: str = "vec_id",
-) -> None:
-    """TOMBSTONE ids out of an IVF or LSH index directory: append the
-    ids to ``<path>/tombstones``; ``query_ivf_index`` /
-    ``query_lsh_index`` anti-join the stored rows against it, so
-    deleted vectors stop appearing in results IMMEDIATELY, without
-    locating or rewriting their list/bucket files (an id lives in 1
-    IVF partition but up to n_tables LSH partitions — the tombstone
-    covers both layouts with one mechanism). Physical removal happens
-    at ``compact_ivf_index`` / ``compact_lsh_index``.
-
-    ``ids`` is a DataFrame carrying ``id_col`` (corpus-scale deletes
-    stay distributed) or a plain Python iterable for the small case.
-    Tombstones accumulate as (id) parquet appends — ids only, bounded
-    by the delete volume, and the serving anti-join is a broadcast-
-    sized build side until deletes grow corpus-scale, at which point
-    compaction is overdue anyway."""
-    if isinstance(ids, DataFrame):
-        df = ids.select(F.col(id_col).alias("id")).distinct()
-    else:
-        rows = [(i,) for i in ids]
-        if not rows:  # empty delete: no tombstone file, no-op
-            return
-        # same inference createDataFrame applied (int → bigint), via a
-        # pure-JVM VALUES relation instead of a pickled python RDD
-        id_t = "bigint" if isinstance(rows[0][0], int) else "string"
-        df = local_values_df(spark, rows, f"id {id_t}")
-    df.write.mode("append").parquet(f"{path}/tombstones")
-
-
-def _swap_rewrite(
-    df: DataFrame, live: str, partition_cols: list[str],
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Atomic-swap rewrite of one index subdirectory — delegates to the
-    shared ``sources.writers.atomic_swap_write`` (leftover-dir guards,
-    refuse-empty-rewrite: compacting away the LAST vector would brick
-    the index; delete the directory instead). The rewrite is clustered
-    on the partition columns first so each directory comes out as ONE
-    file set — compaction that reproduced the input's fragmentation
-    would defeat its own purpose. ``sort_cols`` sorts rows WITHIN each
-    partition's file (the flat-bucket LSH layout: tight parquet
-    min/max ranges per row group for the probed-bucket filter)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
-    )
-
-    if partition_cols:
-        df = df.repartition(*partition_cols)
-    if sort_cols:
-        df = df.sortWithinPartitions(*sort_cols)
-    atomic_swap_write(df, live, partition_cols)
+    ann_store.append(LSH, new_emb, path, id_col=id_col, vec_col=vec_col)
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> None:
-    """Physically apply an IVF index's tombstones: rewrite ``lists``
-    without the deleted ids (atomic directory swap — readers see the
-    old file set or the new one, never a mix), then drop the tombstone
-    dir. Also the small-files maintenance pass for append-heavy
-    indexes (each ``append_to_ivf_index`` adds a file set per touched
-    partition). After compaction the directory equals an index built
-    fresh over the surviving corpus with the same centroids."""
-    import pathlib
-    import shutil
-
-    live = f"{path}/lists"
-    tomb = _tombstone_df(spark, path)
-    df = spark.read.parquet(_pin(live))
-    if tomb is not None:
-        id_col = _index_id_col(df, ("list_id", "qvec", "scale"))
-        df = df.join(tomb.withColumnRenamed("id", id_col), id_col, "left_anti")
-    if _ivf_list_dirs(path):
-        _swap_rewrite(df, live, ["list_id"])
-    else:
-        # cluster-then-sort by hand (no partition cols to trigger it)
-        _swap_rewrite(
-            df.repartition("list_id"), live, [], sort_cols=["list_id"]
-        )
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
+    """Physically apply an IVF (or IVF-PQ) index's tombstones: rewrite
+    ``lists`` without the deleted ids by atomic directory swap (readers
+    see the old file set or the new one, never a mix), then drop the
+    tombstone dir. Also the small-files pass for append-heavy indexes.
+    After compaction the directory equals an index built fresh over
+    the surviving corpus with the same centroids."""
+    ann_store.compact(ann_store.family_of(path), spark, path)
 
 
 def compact_lsh_index(spark: SparkSession, path: str) -> None:
     """Physically apply an LSH index's tombstones AND re-apply the
     GLOBAL hot-bucket cap across everything the appends accumulated
-    (batch-local caps can overfill a bucket; the global md5-order cap
-    restores exactly the build-once membership — see
-    ``append_to_lsh_index`` for the keeper-set argument), then drop
-    the tombstone dir. Atomic directory swap, same as the IVF twin."""
-    import pathlib
-    import shutil
-
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
-    live = f"{path}/buckets"
-    df = spark.read.parquet(_pin(live))
-    id_col = _index_id_col(df, ("table_idx", "bucket", "qvec", "scale"))
-    tomb = _tombstone_df(spark, path)
-    if tomb is not None:
-        df = df.join(tomb.withColumnRenamed("id", id_col), id_col, "left_anti")
-    # global re-cap: smallest (md5(id), id) per (table, bucket), the
-    # identical rule capped_lsh_buckets applies at build time (the
-    # input here is ≤ appends·max_bucket rows per bucket — already
-    # capped per batch — so a one-level window is not a skew funnel)
-    w = Window.partitionBy("table_idx", "bucket").orderBy("_capkey", id_col)
-    df = (
-        df.withColumn("_capkey", F.md5(F.col(id_col).cast("string")))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= conf.max_bucket)
-        .drop("_rn", "_capkey")
-    )
-    if _lsh_bucket_dirs(conf):
-        _swap_rewrite(df, live, ["table_idx", "bucket"])
-    else:
-        _swap_rewrite(
-            df, live, ["table_idx"], sort_cols=["table_idx", "bucket"]
-        )
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
-
-
-def index_stats(
-    spark: SparkSession,
-    path: str,
-    *,
-    tombstone_warn: float = 0.1,
-    files_per_part_warn: float = 4.0,
-    skew_warn: float = 4.0,
-    occupancy_warn: float = 4.0,
-    recall_target: float | None = None,
-) -> dict:
-    """Health report for a stored ANN index (IVF or LSH — detected
-    from the directory layout) and the MAINTENANCE TRIGGER the serving
-    lifecycle needs: appends accumulate file sets per touched
-    partition, deletes accumulate tombstones the serve path must
-    anti-join every query, and drifted data can pile into one list —
-    each is invisible until someone measures it. Everything here is a
-    distributed aggregate collapsed to ONE driver row (no per-bucket
-    collect — LSH bucket cardinality is corpus-sized), so the check
-    itself is safe to run on a 100 TB index.
-
-    Returns a dict:
-      family            'ivf' | 'lsh'
-      rows_live         stored rows still visible to queries
-      n_tombstones      distinct tombstoned ids pending compaction
-      tombstone_frac    n_tombstones / (rows_live + n_tombstones)*
-      n_partitions      list/bucket directories with data
-      rows_max, rows_mean, skew  hottest partition vs mean
-      n_files, files_per_part    parquet fragments (append debt)
-      quantized         int8 payload layout detected
-      recommendations   [] when healthy; human-readable actions
-                        otherwise ('compact: ...', 'retrain: ...')
-
-    *approximation: tombstones count ids WRITTEN, which for LSH is one
-    id across up to n_tables partitions and may include ids never in
-    the index (delete-before-append is the documented update recipe) —
-    the fraction is a maintenance signal, not an exact live ratio.
-
-    The thresholds are advisory defaults: a tombstone fraction over
-    ~10% makes every query pay a visible anti-join build; more than ~4
-    file sets per partition means the probed-directory scan opens 4×
-    the footers it needs; IVF skew beyond ~4× the mean list says the
-    centroids no longer describe the data (retrain), while LSH bucket
-    skew is capped at build time so it signals append-cap drift
-    (compact re-applies the global cap). ``occupancy_warn`` flags
-    GROWTH debt: a mean partition more than that multiple of the
-    adaptive-geometry target (``CELL_TARGET`` / ``LSH_TARGET_BUCKET``)
-    means the corpus outgrew the build-time cell/bit count — even a
-    perfectly balanced index then pays occupancy² candidate work —
-    and the recommendation names the rebuild with "auto" geometry
-    that restores the target."""
-    import pathlib
-
-    p = pathlib.Path(path)
-    if (p / "centroids").exists():
-        # an IVF-PQ dir shares the IVF layout plus a codebooks subdir
-        family = "ivfpq" if (p / "codebooks").exists() else "ivf"
-        live = f"{path}/lists"
-        part_cols = ["list_id"]
-    elif (p / "conf").exists():
-        family, live = "lsh", f"{path}/buckets"
-        part_cols = ["table_idx", "bucket"]
-    else:
-        raise ValueError(f"no IVF or LSH index found at {path}")
-
-    # LSH stats read conf AND buckets — pin them as a set, so a
-    # concurrent rebuild's sequential swaps can't feed the advisor a
-    # geometry that doesn't match the buckets being measured
-    pins = (
-        _pin_index(path, ("conf", "buckets")) if family == "lsh"
-        else {"lists": _pin(live)}
-    )
-    df = spark.read.parquet(pins["buckets" if family == "lsh" else "lists"])
-    quantized = "qvec" in df.columns
-    # project the file name BEFORE aggregating (Spark refuses the
-    # non-deterministic expression inside an aggregate function)
-    per = (
-        df.select(*part_cols, F.input_file_name().alias("_file"))
-        .groupBy(*part_cols)
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.countDistinct("_file").alias("files"),
-        )
-    )
-    row = per.agg(
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.sum("rows").alias("rows_live"),
-        F.max("rows").alias("rows_max"),
-        F.avg("rows").alias("rows_mean"),
-        F.sum("files").alias("n_files"),
-        F.avg("files").alias("files_per_part"),
-    ).collect()[0]
-    tomb = _tombstone_df(spark, path)
-    n_tomb = tomb.select("id").distinct().count() if tomb is not None else 0
-
-    rows_live = int(row.rows_live or 0)
-    tombstone_frac = (
-        n_tomb / (rows_live + n_tomb) if (rows_live + n_tomb) else 0.0
-    )
-    skew = float(row.rows_max / row.rows_mean) if row.rows_mean else 0.0
-    rec: list[str] = []
-    if tombstone_frac >= tombstone_warn:
-        rec.append(
-            f"compact: {tombstone_frac:.1%} of ids are tombstoned — every "
-            "query pays the anti-join; rewrite the live set "
-            f"(compact_{family}_index)"
-        )
-    if float(row.files_per_part or 0) >= files_per_part_warn:
-        rec.append(
-            f"compact: {float(row.files_per_part):.1f} file sets per "
-            "partition (append debt) — probed scans open that many extra "
-            "footers"
-        )
-    if skew >= skew_warn:
-        rec.append(
-            f"retrain: hottest partition holds {skew:.1f}x the mean — "
-            "centroids no longer fit the data"
-            if family != "lsh"
-            else f"compact: hottest bucket holds {skew:.1f}x the mean — "
-            "re-apply the global bucket cap"
-        )
-    target = CELL_TARGET if family != "lsh" else LSH_TARGET_BUCKET
-    mean_rows = float(row.rows_mean or 0.0)
-    if mean_rows >= occupancy_warn * target:
-        rebuild_hint = {
-            "ivf": "cell count; rebuild_ivf_index(n_centroids='auto')",
-            "ivfpq": "cell count; rebuild_ivfpq_index(source_df) — "
-            "codes cannot retrain, so the source embeddings are "
-            "required",
-            "lsh": "bit count; rebuild_lsh_index(n_planes='auto')",
-        }[family]
-        rec.append(
-            f"retrain: mean partition holds {mean_rows:.0f} rows vs the "
-            f"~{target} adaptive-geometry target — the corpus outgrew the "
-            "build-time " + rebuild_hint
-        )
-    advisor = None
-    if family == "lsh":
-        conf = spark.read.parquet(pins["conf"]).collect()[0]
-        advisor = multiprobe_advisor(
-            int(conf.n_planes), int(conf.n_tables),
-            recall_target=recall_target,
-        )
-        if advisor["deficit"] > 0:
-            cur, pick = advisor["current"], advisor["pick"]
-            if recall_target is not None and pick["measured"]:
-                # r12 (the r11 verdict's item 5): the advisor's priced
-                # pick becomes a NAMED maintenance action with its
-                # cost multipliers attached — maintain_index surfaces
-                # this verbatim (rebuilds stay operator-applied)
-                rec.append(
-                    f"recall-rebuild: rebuild_lsh_index(n_tables="
-                    f"{pick['n_tables']}) then serve with n_multiprobe="
-                    f"{pick['flips']} reaches measured recall"
-                    f"≈{pick['recall']} at the {recall_target} target "
-                    f"(store ×{pick['store_multiplier']}, candidate "
-                    f"reads ×{pick['probe_volume_multiplier']}; anchor: "
-                    f"{advisor['anchor_geometry']['sweep']})"
-                )
-            else:
-                rec.append(
-                    f"recall: stored geometry is {advisor['deficit']} "
-                    "table-doubling(s) short of the "
-                    f"{int(conf.n_planes)}-bit rule — serve with "
-                    f"n_multiprobe={cur.get('flips')} (candidate reads "
-                    f"×{1 << int(cur.get('flips', 0))}, store ×1) or "
-                    f"rebuild with n_tables={pick['n_tables']} (store "
-                    f"×{pick['store_multiplier']}, reads ~flat); "
-                    "multiprobe_advisor(recall_target=...) prices every "
-                    "split"
-                )
-    return {
-        **({"multiprobe": advisor} if advisor is not None else {}),
-        "family": family,
-        "rows_live": rows_live,
-        "n_tombstones": n_tomb,
-        "tombstone_frac": round(tombstone_frac, 6),
-        "n_partitions": int(row.n_partitions),
-        "rows_max": int(row.rows_max or 0),
-        "rows_mean": round(float(row.rows_mean or 0.0), 3),
-        "skew": round(skew, 3),
-        "n_files": int(row.n_files or 0),
-        "files_per_part": round(float(row.files_per_part or 0.0), 3),
-        "quantized": quantized,
-        "recommendations": rec,
-    }
-
-
-def maintain_index(
-    spark: SparkSession,
-    path: str,
-    **stat_thresholds,
-) -> dict:
-    """The scheduled-maintenance one-shot: run ``index_stats`` and
-    APPLY every compact-class recommendation (tombstone debt, append
-    fragmentation, LSH cap drift) with the family's compactor, then
-    re-measure. Retrain-class recommendations are REPORTED but never
-    auto-applied — retraining changes served results, so it stays a
-    deliberate operator action (``rebuild_{ivf,lsh}_index``, or a
-    re-save for IVF-PQ whose codes cannot retrain).
-
-    Returns {"family", "before", "actions", "after"}: the stats rows
-    either side and the action strings executed. A healthy index is a
-    no-op ("actions": []), so this is safe to run on a cron cadence —
-    the same idempotent-maintenance shape as compact_table.
-    ``stat_thresholds`` pass through to ``index_stats``
-    (tombstone_warn / files_per_part_warn / skew_warn /
-    occupancy_warn / recall_target — the last turns a deficit LSH
-    store's generic recall note into the advisor's priced
-    ``recall-rebuild:`` action with its store/read multipliers,
-    still operator-applied, never automatic)."""
-    before = index_stats(spark, path, **stat_thresholds)
-    actions: list[str] = []
-    if any(r.startswith("compact:") for r in before["recommendations"]):
-        if before["family"] == "lsh":
-            compact_lsh_index(spark, path)
-            actions.append("compact_lsh_index")
-        else:  # ivf and ivfpq share the layout-agnostic compactor
-            compact_ivf_index(spark, path)
-            actions.append("compact_ivf_index")
-    after = index_stats(spark, path, **stat_thresholds) if actions else before
-    return {
-        "family": before["family"],
-        "before": before,
-        "actions": actions,
-        "after": after,
-    }
+    (the result is exactly the build-once membership — see
+    ``append_to_lsh_index``), by atomic directory swap; then drop the
+    tombstone dir."""
+    ann_store.compact(LSH, spark, path)
 
 
 def rebuild_ivf_index(
@@ -2829,8 +2365,8 @@ def rebuild_ivf_index(
     centroids fixed by contract, so under real distribution drift the
     hottest list grows unboundedly and probing degrades; the fix is a
     periodic retrain on the CURRENT live corpus and a refile of every
-    vector under the new centroids, which this performs with the same
-    deterministic training path as the original build.
+    vector under the new centroids, with the same deterministic
+    training path as the original build.
 
     Corpus source: pass ``corpus`` (id, vec) to rebuild from the
     source of truth — the right choice when the index is quantized,
@@ -2838,94 +2374,21 @@ def rebuild_ivf_index(
     (error ≤ scale/2 per component, which this does, documented, when
     ``corpus`` is omitted). Tombstoned ids are excluded either way and
     the tombstone dir is dropped after the rewrite (the rebuild IS a
-    compaction). ``n_centroids`` defaults to the stored list count.
+    compaction). ``n_centroids`` defaults to the stored list count;
+    "auto" re-sizes it to the LIVE corpus (``adaptive_centroids``),
+    restoring bounded occupancy after growth.
 
     Both subdirectories are rewritten via ``atomic_swap_write``
     (readers of EACH see old or new, never a mix), lists first, then
-    centroids. The cross-directory window is not atomic: a crash
-    between the two swaps leaves new lists under old centroids —
-    detectable (probe quality collapses) and HEALABLE by re-running
-    rebuild, because the lists always hold the full live vector set
-    regardless of how they are partitioned. A zero-downtime
-    alternative at cluster scale is building a fresh directory and
-    flipping a path pointer; this in-place form exists for the
-    single-writer maintenance schedule the CLI drives.
-
-    ``n_centroids="auto"`` re-sizes the list count to the LIVE corpus
-    (``adaptive_centroids``) — the growth half of the retrain story:
-    a corpus that outgrew its build-time cell count gets proportional
-    cells back, restoring bounded occupancy (``index_stats`` flags
-    this as its occupancy recommendation)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
+    centroids. A crash between the two swaps leaves new lists under
+    old centroids — detectable (probe quality collapses) and HEALABLE
+    by re-running rebuild, because the lists always hold the full live
+    vector set regardless of how they are partitioned. Pointer mode
+    (``enable_pointer_swaps``) survives the rebuild."""
+    ann_store.rebuild(
+        IVF, spark, path, corpus=corpus, id_col=id_col, vec_col=vec_col,
+        n_centroids=n_centroids, n_iters=n_iters, max_train=max_train,
     )
-
-    stored = spark.read.parquet(_pin(f"{path}/lists"))
-    was_q = "qvec" in stored.columns
-    if n_centroids is None:
-        n_centroids = (
-            spark.read.parquet(_pin(f"{path}/centroids")).count()
-        )
-    if corpus is None:
-        # preserve the STORED id column name: renaming it to the
-        # id_col default would fork the index schema for any index
-        # built with a non-default id, silently breaking later
-        # appends/tombstones against the same directory
-        sid = _index_id_col(stored, ("list_id", "qvec", "scale"))
-        id_col = sid
-        live = _apply_tombstones(stored, path, sid)
-        if was_q:
-            corpus = dequantize_embeddings(live, id_col=sid, out_col=vec_col)
-        else:
-            # detect the stored vector column too (same rationale as
-            # sid): an index saved with a custom vec_col must rebuild
-            # without the caller re-supplying the name
-            vec_col = _index_vec_col(stored, ("list_id",))
-            corpus = live.select(F.col(sid), F.col(vec_col))
-    else:
-        corpus = corpus.select(id_col, vec_col)
-        tomb = _tombstone_df(spark, path)
-        if tomb is not None:
-            corpus = corpus.join(
-                tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-            )
-
-    cents = train_ivf_centroids(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=_resolve_centroids(corpus, n_centroids, cap=max_train),
-        n_iters=n_iters,
-        max_train=max_train,
-    )
-    home = (
-        ivf_assign(corpus, cents, vec_col=vec_col, n_probe=1, keep_vec=True)
-        .where(F.col("probe_rank") == 0)
-        .drop("probe_rank")
-    )
-    if was_q:
-        home = quantize_embeddings(
-            home, id_col=id_col, vec_col=vec_col, keep_cols=("list_id",)
-        )
-    if _ivf_list_dirs(path):
-        _swap_rewrite(home, f"{path}/lists", ["list_id"])
-    else:
-        _swap_rewrite(
-            home.repartition("list_id"), f"{path}/lists", [],
-            sort_cols=["list_id"],
-        )
-    cent_df = local_values_df(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, centroid array<double>",
-    ).coalesce(1)
-    atomic_swap_write(cent_df, f"{path}/centroids", [])
-    import pathlib
-    import shutil
-
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)
 
 
 def rebuild_lsh_index(
@@ -2940,103 +2403,27 @@ def rebuild_lsh_index(
     max_bucket: int | None = None,
 ) -> None:
     """Rebuild an LSH index in place — the LSH mirror of
-    ``rebuild_ivf_index``, closing the one asymmetry in the
-    maintenance story: ``compact_lsh_index`` restores the build-once
-    global cap but cannot CHANGE the index geometry, and re-tuning
-    ``n_tables``/``n_planes``/``max_bucket`` (recall dial vs storage)
-    previously meant a manual ``save_lsh_index`` over the live set
-    plus a directory swap. This wraps exactly that: derive the live
-    vector set (stored memberships deduped by id, tombstones applied),
-    re-bucket it under the NEW conf — hyperplanes are md5-derived from
-    the conf, never stored, so a conf change IS a plane change — and
-    atomic-swap both subdirectories. Omitted config fields keep their
-    stored values, the stored id/vector column names are preserved
-    (detected like ``_index_id_col``), and a quantized index stays
-    quantized (re-bucketing runs on the dequantized vectors, error ≤
-    scale/2 per component — pass ``corpus`` to rebuild from the source
-    of truth instead; tombstoned ids are excluded either way).
+    ``rebuild_ivf_index``, and the way to CHANGE the geometry
+    (``n_tables``/``n_planes``/``max_bucket``: the recall dial vs
+    storage), which compaction cannot: derive the live vector set
+    (stored memberships deduped by id, tombstones applied), re-bucket
+    it under the NEW conf — hyperplanes are md5-derived from the conf,
+    never stored, so a conf change IS a plane change — and atomic-swap
+    buckets, then conf. Omitted fields keep their stored values ("auto"
+    re-sizes to the live corpus), the stored id/vector column names
+    are preserved, and a quantized index stays quantized (re-bucketing
+    runs on the dequantized vectors — pass ``corpus`` to rebuild from
+    the source of truth instead; tombstoned ids are excluded either
+    way).
 
     Rebuild == ``save_lsh_index(live_set, **new_conf)`` bit for bit
-    (pinned by test), where live_set is the set of vectors the stored
-    index still carries: a hot-bucket cap drops its overflow at WRITE
+    (pinned by test). A hot-bucket cap drops its overflow at WRITE
     time, so a vector capped out of every table is gone from the index
-    and no later rebuild can resurrect it (the documented recall
-    trade of capping; rebuild from ``corpus`` to re-file dropped
-    vectors). Buckets swap first, then conf: the
-    cross-directory crash window (new buckets under the old conf's
-    planes) degrades recall but is HEALED by re-running rebuild — the
-    bucket rows always carry the full live vector set regardless of
-    how they are bucketed. The tombstone dir is dropped at the end
-    (the rebuild is also a compaction)."""
-    from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-        atomic_swap_write,
+    and no later rebuild can resurrect it (rebuild from ``corpus`` to
+    re-file dropped vectors). A crash between the two swaps (new
+    buckets under the old conf's planes) degrades recall and is HEALED
+    by re-running rebuild."""
+    ann_store.rebuild(
+        LSH, spark, path, corpus=corpus, id_col=id_col, vec_col=vec_col,
+        n_planes=n_planes, n_tables=n_tables, max_bucket=max_bucket,
     )
-
-    conf = spark.read.parquet(_pin(f"{path}/conf")).collect()[0]
-    n_planes = conf.n_planes if n_planes is None else n_planes
-    n_tables = conf.n_tables if n_tables is None else n_tables
-    max_bucket = conf.max_bucket if max_bucket is None else max_bucket
-    stored = spark.read.parquet(_pin(f"{path}/buckets"))
-    was_q = "qvec" in stored.columns
-    if corpus is None:
-        sid = _index_id_col(stored, ("table_idx", "bucket", "qvec", "scale"))
-        id_col = sid
-        # an LSH index stores up to n_tables copies of each vector —
-        # collapse to one per id before re-bucketing (copies are
-        # identical payloads, so any survivor is THE vector)
-        live = _apply_tombstones(stored, path, sid).dropDuplicates([sid])
-        if was_q:
-            corpus = dequantize_embeddings(live, id_col=sid, out_col=vec_col)
-        else:
-            vec_col = _index_vec_col(stored, ("table_idx", "bucket"))
-            corpus = live.select(F.col(sid), F.col(vec_col))
-    else:
-        corpus = corpus.select(id_col, vec_col)
-        tomb = _tombstone_df(spark, path)
-        if tomb is not None:
-            corpus = corpus.join(
-                tomb.withColumnRenamed("id", id_col), id_col, "left_anti"
-            )
-    corpus = corpus.persist()
-    # "auto": re-size the bit/table counts to the LIVE corpus (growth
-    # story — same rules as save_lsh_index; the new conf row stores
-    # the results)
-    n_planes = _resolve_planes(corpus, n_planes)
-    n_tables = _resolve_tables(n_planes, n_tables)
-    capped = capped_lsh_buckets(
-        corpus,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_planes=n_planes,
-        n_tables=n_tables,
-        dim=conf.dim,
-        max_bucket=max_bucket,
-    )
-    new_stored = capped.join(corpus, id_col)
-    if was_q:
-        new_stored = quantize_embeddings(
-            new_stored, id_col=id_col, vec_col=vec_col,
-            keep_cols=("table_idx", "bucket"),
-        )
-    bucket_dirs = _lsh_bucket_dirs(conf)
-    if bucket_dirs:
-        _swap_rewrite(new_stored, f"{path}/buckets", ["table_idx", "bucket"])
-    else:
-        _swap_rewrite(
-            new_stored, f"{path}/buckets", ["table_idx"],
-            sort_cols=["table_idx", "bucket"],
-        )
-    conf_df = local_values_df(
-        spark,
-        [(n_planes, n_tables, conf.dim, max_bucket, bucket_dirs)],
-        "n_planes int, n_tables int, dim int, max_bucket int, "
-        "bucket_dirs boolean",
-    ).coalesce(1)
-    atomic_swap_write(conf_df, f"{path}/conf", [])
-    corpus.unpersist()
-    import pathlib
-    import shutil
-
-    t = pathlib.Path(path) / "tombstones"
-    if t.exists():
-        shutil.rmtree(t)

@@ -647,59 +647,35 @@ def stream_index_vectors(
     stored-vector-type cast, so a double-typed JSON stream lands
     correctly in a float-built index.
 
-    The family is AUTO-DETECTED from the directory layout (a
-    ``codebooks`` subdir marks IVF-PQ): an IVF-PQ target streams
-    through the identical novel-id filter and appends CODES under the
-    fixed centroids AND codebooks (``append_to_ivfpq_index`` — same
-    fixed-filing contract), with compaction routed to the shared
-    layout-agnostic compactor."""
-    import pathlib
-
-    from pyspark.errors import AnalysisException
-
+    The family is read from the directory by the index store
+    (``ann_store.family_of``): an IVF-PQ target streams through the
+    identical novel-id filter and appends CODES under the fixed
+    centroids AND codebooks (same fixed-filing contract), and
+    compaction is the store's."""
     from hadoop_2_10_0_src_mapreduce_spark.checkpointing import (
         RoundCheckpointer,
     )
+    from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store
     from hadoop_2_10_0_src_mapreduce_spark.operators.dedup import (
         filter_novel_fps,
     )
-    from hadoop_2_10_0_src_mapreduce_spark.operators.pq import (
-        append_to_ivfpq_index,
-    )
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _index_id_col,
-        append_to_ivf_index,
-        compact_ivf_index,
-    )
-
-    is_pq = (pathlib.Path(index_path) / "codebooks").exists()
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
         batch = batch_df.select(id_col, vec_col).dropDuplicates([id_col])
-        from hadoop_2_10_0_src_mapreduce_spark.sources.writers import (
-            pin_generation,
-        )
-
-        try:
-            stored = s.read.parquet(pin_generation(f"{index_path}/lists"))
-        except AnalysisException as e:
-            raise ValueError(
-                f"stream_index_vectors needs an existing IVF/IVF-PQ index "
-                f"at {index_path} (save_ivf_index / save_ivfpq_index builds "
-                "one; the centroids define where appended vectors are filed)"
-            ) from e
-        sid = _index_id_col(stored, ("list_id", "qvec", "scale"))
+        # the index must exist: its metadata defines where vectors file
+        fam = ann_store.family_of(index_path)
+        stored, sid = ann_store.read_rows(s, index_path, fam)
         seen = stored.select(F.col(sid).alias(id_col))
         pin = RoundCheckpointer(
             s, f"{pin_dir}/batch-{batch_id}" if pin_dir else None
         )
         novel = pin(filter_novel_fps(batch, seen, fp_col=id_col))
         if novel.take(1):
-            append = append_to_ivfpq_index if is_pq else append_to_ivf_index
-            append(novel, index_path, id_col=id_col, vec_col=vec_col)
+            ann_store.append(fam, novel, index_path, id_col=id_col,
+                             vec_col=vec_col)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_ivf_index(s, index_path)
+            ann_store.compact(fam, s, index_path)
         pin.close()  # append landed (or nothing was novel)
 
     reader = spark.readStream.schema(schema)

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_2_10_0_src_mapreduce_spark.functions import text as T
-from hadoop_2_10_0_src_mapreduce_spark.operators import dedup, similarity
+from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store, dedup, similarity
 from tests.conftest import SF_SMALL
 
 
@@ -365,6 +365,33 @@ def test_components_failure_cleans_checkpoint_steps(spark, tmp_path):
             pairs, max_iters=1, checkpoint_dir=str(ckdir)
         )
     assert not ckdir.exists()
+
+
+def test_local_checkpoints_released_like_reliable_steps(spark):
+    """Local-mode RoundCheckpointer keeps the reliable mode's cleanup
+    contract: superseded localCheckpoint RDDs are released as the loop
+    runs, and a failed loop releases all of them. clearCache() does not
+    reach these RDDs, so without that bookkeeping they stay persistent
+    for the session."""
+    from hadoop_2_10_0_src_mapreduce_spark.plans.registry import all_queries
+    from tests.conftest import SF_MED
+
+    jsc = spark.sparkContext._jsc
+    persistent = lambda: set(jsc.getPersistentRDDs().keys())
+    before = persistent()
+    all_queries()["sim_near_dup_embeddings"](spark, SF_MED).collect()
+    spark.catalog.clearCache()
+    # at most the final step, which backs the returned frame
+    assert len(persistent() - before) <= 1
+
+    before = persistent()
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.duplicate_components(pairs, max_iters=1)
+    spark.catalog.clearCache()
+    assert persistent() - before == set()
 
 
 def _mega_corpus(spark):
@@ -3204,9 +3231,9 @@ def test_lsh_flat_bucket_layout_serves_identically(spark, tmp_path):
     bucket) directory layout serves — it only changes WHERE the
     probed-bucket skip happens (sorted parquet row-group stats vs
     16·2^p directories, measured 13× at the sf1 fixture, SURVEY §8).
-    Appends and compaction follow the stored layout; a conf row
-    without the column (pre-layout indexes) reads as the directory
-    layout."""
+    Appends and compaction follow the stored layout, which is read
+    from the directory shape — so an index whose conf predates the
+    bucket_dirs column keeps its directory layout."""
     import pathlib
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
@@ -3251,10 +3278,17 @@ def test_lsh_flat_bucket_layout_serves_identically(spark, tmp_path):
     served = similarity.query_lsh_index(queries, base, k=5).collect()
     assert served and 0 not in {r.neighbor_id for r in served}
 
-    # pre-layout conf (no bucket_dirs column) reads as the dir layout
-    legacy_conf = spark.read.parquet(f"{dirs}/conf").drop("bucket_dirs")
-    r = legacy_conf.collect()[0]
-    assert similarity._lsh_bucket_dirs(r) is True
+    # a conf written before the bucket_dirs column existed: the layout
+    # is read from the directory shape, so maintenance keeps the
+    # per-(table, bucket) directories and the index keeps serving
+    legacy = spark.read.parquet(f"{dirs}/conf").drop("bucket_dirs").collect()
+    spark.createDataFrame(legacy).coalesce(1).write.mode("overwrite").parquet(
+        f"{dirs}/conf"
+    )
+    assert ann_store.row_dirs(dirs) is True
+    similarity.compact_lsh_index(spark, dirs)
+    assert ann_store.row_dirs(dirs) is True
+    assert similarity.query_lsh_index(queries, dirs, k=5).collect()
 
 
 def test_ivf_flat_lists_layout_serves_identically(spark, tmp_path):
@@ -3275,7 +3309,7 @@ def test_ivf_flat_lists_layout_serves_identically(spark, tmp_path):
         emb.where(F.col("vec_id") < 450), flat, n_centroids=8,
         list_dirs=False,
     )
-    assert similarity._ivf_list_dirs(dirs) and not similarity._ivf_list_dirs(flat)
+    assert ann_store.row_dirs(dirs) and not ann_store.row_dirs(flat)
     as_rows = lambda p: sorted(
         (r.query_id, r.rnk, r.neighbor_id, r.sim)
         for r in similarity.query_ivf_index(queries, p, k=5, n_probe=4).collect()
@@ -3297,7 +3331,7 @@ def test_ivf_flat_lists_layout_serves_identically(spark, tmp_path):
     assert 3 not in {t[2] for t in got}
 
     similarity.rebuild_ivf_index(spark, flat, n_centroids=8)
-    assert not similarity._ivf_list_dirs(flat)
+    assert not ann_store.row_dirs(flat)
     assert as_rows(flat), "flat rebuild stopped serving"
 
 

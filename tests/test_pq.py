@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_2_10_0_src_mapreduce_spark.operators import pq, similarity
+from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store, pq, similarity
 from tests.conftest import SF_SMALL
 
 
@@ -173,7 +173,7 @@ def test_ivfpq_save_query_probe_all_equals_flat_adc(spark, emb, books, tmp_path)
     queries = emb.where(F.col("vec_id") < 10)
     served = pq.query_ivfpq_index(queries, path, k=10, n_probe=8)
 
-    stored_books = pq._load_pq_codebooks(spark, path)
+    stored_books = ann_store.read_meta(spark, path)["codebooks"]
     codes = spark.read.parquet(f"{path}/lists").select("vec_id", "pq_codes")
     flat = pq.pq_topk(codes, queries, stored_books, k=10)
     as_rows = lambda df: sorted(
@@ -316,10 +316,6 @@ def test_residual_reconstruction_beats_plain_on_clusters(spark, clustered, tmp_p
     """With few codes on clustered data, residual codebooks spend
     their bits on within-cell noise instead of cluster positions —
     reconstructions must land measurably closer."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
-        _load_ivf_centroids,
-    )
-
     errs = {}
     for name, residual in (("plain", False), ("res", True)):
         path = str(tmp_path / name)
@@ -327,12 +323,12 @@ def test_residual_reconstruction_beats_plain_on_clusters(spark, clustered, tmp_p
             clustered, path, n_centroids=5, n_subspaces=8, n_codes=8,
             residual=residual,
         )
-        cents = _load_ivf_centroids(spark, path)
-        books = pq._load_pq_codebooks(spark, path)
+        meta = ann_store.read_meta(spark, path)
+        cents, books = meta["centroids"], meta["codebooks"]
         # decode through the API: residual stores pass centers= (the
         # conf records which — pq_decode without them would return
         # near-zero residuals, the documented audit footgun)
-        assert pq._ivfpq_conf(spark, path)["residual"] is residual
+        assert meta["conf"]["residual"] is residual
         rec_rows = pq.pq_decode(
             spark.read.parquet(f"{path}/lists"), books,
             centers=cents if residual else None,
@@ -410,7 +406,7 @@ def test_residual_append_equals_fresh_and_conf_backcompat(spark, clustered, tmp_
     pq.save_ivfpq_index(clustered, legacy, n_centroids=5, n_subspaces=8,
                         n_codes=16)
     shutil.rmtree(f"{legacy}/conf")
-    assert pq._ivfpq_conf(spark, legacy) == {"residual": False}
+    assert ann_store.read_meta(spark, legacy)["conf"] == {"residual": False}
     queries = clustered.where(F.col("vec_id") < 5)
     assert pq.query_ivfpq_index(queries, legacy, k=3, n_probe=5).count() > 0
 
@@ -466,7 +462,7 @@ def test_rebuild_ivfpq_preserves_conf_and_compacts(spark, clustered, tmp_path):
     similarity.delete_from_index(spark, path, [0, 1, 2])
     pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
 
-    conf = pq._ivfpq_conf(spark, path)
+    conf = ann_store.read_meta(spark, path)["conf"]
     assert conf["residual"] is True and conf["n_codes"] == 16
 
     import pathlib
@@ -527,7 +523,7 @@ def test_ivfpq_flat_lists_layout(spark, emb, tmp_path):
     pq.save_ivfpq_index(base, dirs, n_centroids=8, n_codes=64)
     pq.save_ivfpq_index(base, flat, n_centroids=8, n_codes=64,
                         list_dirs=False)
-    assert not similarity._ivf_list_dirs(flat)
+    assert not ann_store.row_dirs(flat)
     queries = emb.where(F.col("vec_id") < 10)
     as_rows = lambda p: sorted(
         (r.query_id, r.rnk, r.neighbor_id, r.sim)
@@ -537,9 +533,9 @@ def test_ivfpq_flat_lists_layout(spark, emb, tmp_path):
     assert got == as_rows(dirs) and got
 
     pq.append_to_ivfpq_index(emb.where(F.col("vec_id") >= 400), flat)
-    assert not similarity._ivf_list_dirs(flat)
+    assert not ann_store.row_dirs(flat)
     pq.rebuild_ivfpq_index(spark, flat, emb, n_centroids=8)
-    assert not similarity._ivf_list_dirs(flat)
+    assert not ann_store.row_dirs(flat)
     assert not any(
         d.name.startswith("list_id=")
         for d in pathlib.Path(f"{flat}/lists").iterdir() if d.is_dir()
@@ -563,7 +559,7 @@ def test_rebuild_heals_crash_inside_swap_window(spark, clustered, tmp_path):
     assert not pathlib.Path(f"{path}/lists").exists()
     pq.rebuild_ivfpq_index(spark, path, clustered, n_centroids=5)
     assert pathlib.Path(f"{path}/lists").exists()
-    assert pq._ivfpq_conf(spark, path)["residual"] is True
+    assert ann_store.read_meta(spark, path)["conf"]["residual"] is True
     queries = clustered.where(F.col("vec_id") < 5)
     assert pq.query_ivfpq_index(queries, path, k=3, n_probe=5).count() > 0
 
@@ -879,7 +875,7 @@ def test_auto_layout_resolves_from_list_count(spark, emb, tmp_path):
     above (the measured crossover) — and the served rows are
     bit-identical across layouts at both geometries, so auto can never
     change results, only the skip mechanism."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators.similarity import (
+    from hadoop_2_10_0_src_mapreduce_spark.operators.ann_store import (
         FLAT_LISTS_THRESHOLD,
         _resolve_list_dirs,
     )
@@ -899,7 +895,7 @@ def test_auto_layout_resolves_from_list_count(spark, emb, tmp_path):
     similarity.save_ivf_index(emb, small_auto, n_centroids=8)
     similarity.save_ivf_index(emb, small_dirs, n_centroids=8,
                               list_dirs=True)
-    assert similarity._ivf_list_dirs(small_auto)
+    assert ann_store.row_dirs(small_auto)
     got = as_rows(similarity.query_ivf_index(queries, small_auto, k=5))
     assert got == as_rows(
         similarity.query_ivf_index(queries, small_dirs, k=5)
@@ -911,7 +907,7 @@ def test_auto_layout_resolves_from_list_count(spark, emb, tmp_path):
     pq.save_ivfpq_index(emb, big_auto, n_centroids=300, n_codes=16)
     pq.save_ivfpq_index(emb, big_flat, n_centroids=300, n_codes=16,
                         list_dirs=False)
-    assert not similarity._ivf_list_dirs(big_auto)
+    assert not ann_store.row_dirs(big_auto)
     got = as_rows(pq.query_ivfpq_index(queries, big_auto, k=5))
     assert got == as_rows(
         pq.query_ivfpq_index(queries, big_flat, k=5)

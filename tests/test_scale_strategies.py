@@ -528,7 +528,7 @@ def test_no_library_composition_plans_a_scale_killer(spark, tmp_path):
     contamination report, the span cutter, and the ANN maintenance
     append paths must never plan a row-wise Python UDF, a cartesian,
     or a nested-loop join."""
-    from hadoop_2_10_0_src_mapreduce_spark.operators import dedup, similarity
+    from hadoop_2_10_0_src_mapreduce_spark.operators import ann_store, dedup, similarity
 
     docs = spark.createDataFrame(
         [(i, f"line one of {i}\nshared cookie banner text\nbody {i}")
@@ -566,7 +566,7 @@ def test_no_library_composition_plans_a_scale_killer(spark, tmp_path):
         "cut_spans": dedup.cut_repeated_spans(docs, "text", "doc_id", k=3),
         "ivf_append_filing": similarity.ivf_assign(
             emb.select("vec_id", "embedding"),
-            similarity._load_ivf_centroids(spark, path),
+            ann_store.read_meta(spark, path)["centroids"],
             n_probe=1, keep_vec=True,
         ),
         "chunking": chunk_documents(docs, max_tokens=4, overlap=1),
