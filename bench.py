@@ -9,58 +9,33 @@ Each query is forced end-to-end through the 'noop' sink (full compute,
 no driver collect — the honest way to time a distributed plan). Session
 startup and a one-query JVM warmup are excluded from the metric.
 
-r10 weather fields (see the CONTROL block below): ``control_sec`` /
-``control_runs`` (a pinned Spark-only synthetic interleaved through
-the window), ``control_ref_sec`` (the frozen quiet-window floor),
-``weather_ratio`` = control_sec / ref (≥1, clamped), and
-``r3_equivalent_normalized`` = r3_equivalent_total / weather_ratio —
-the cross-round comparator that cancels host contention the way the
-r6 worktree experiment did by hand. THE GATE IS THE RAW NUMBER:
-``r3_equivalent_total`` is what gets diffed against the frozen 40.32
-bar; the normalized value is secondary evidence for adjudicating a
-stormy window, never the headline (the control shares the Spark
-session with the queries, so a slowdown CAUSED by the code — GC or
-cache pressure leaking across queries — would inflate the control
-like host weather and be normalized away; the r10 ADVICE medium).
-Calibration mode: ``python bench.py --control-only [N]`` prints N
-standalone control times (one per line) + a summary line.
+Host weather is estimated OUTSIDE the bench JVM: tools/weather_probe.py
+runs as its own OS process (no JVM, own interpreter) executing a
+deterministic 1-thread CPU+memory workload. The bench triggers a short
+burst from it in the idle gaps between timed queries — every 10
+queries in each pass, every 4 re-timed queries, every 4 branch timings
+— so it samples the moments the queries ran in without competing with
+any timed execution. (A probe free-running through the window read
+3.4-9x while queries ran: the bench's own wide stages saturate the box,
+and a probe cannot tell legitimate bench CPU from host contention.)
+Because the probe shares nothing with the session, a slowdown caused by
+the code — GC or cache pressure building up inside the JVM — shows in
+the query numbers and not in the weather, so it is never normalized
+away. The JSON carries ``external_control`` (legs, per-phase medians,
+the min-across-passes weather), ``external_weather_ratio`` and
+``r3_equivalent_normalized_ext`` = r3_equivalent_total with each slice
+divided by the weather of the phase that measured it. If the probe
+cannot start, or a burst fails, those fields are simply absent and the
+raw numbers stand. Known bias: a 1-wide probe can read box-wide
+contention somewhat differently than wide Spark stages, so the ratio is
+evidence for adjudicating a stormy window, not a verdict by itself.
 
-r12 external control (the standing ADVICE medium, closed): a SECOND
-weather estimator that does NOT share the session —
-tools/weather_probe.py runs as its own OS process (no JVM, own
-interpreter) executing a deterministic 1-thread CPU+memory workload.
-Sampling is PAIRED, not free-running: right after each in-session
-control leg, while the Spark session sits idle between timed queries,
-the bench triggers a short external burst — so the two controls
-sample the SAME moments, one inside the bench JVM and one outside it.
-(The first cut free-ran on a fixed cadence and read weather 3.4-9x
-while the in-session control read 1.17: during query execution the
-bench's own 32-wide stages saturate the box, and an always-on probe
-cannot tell legitimate bench CPU from host contention. Measured, then
-redesigned — the pairing is the point.) Code-caused slowdown confined
-to the bench JVM (GC, cache-manager bloat, python-worker churn)
-inflates the in-session control but CANNOT touch the probe; host
-contention inflates both. The JSON gains ``external_control`` (legs,
-per-phase medians, its own min-median weather under the same
-estimator rules) and ``weather_divergence`` = in-session weather /
-external weather: ~1 says the in-session story is host weather; >>1
-says the slowdown lives inside the session and the normalized number
-should not be trusted. Known bias, stated: a 1-wide probe can read
-box-wide contention somewhat differently than 32-wide Spark stages —
-divergence is evidence for adjudication, not a verdict by itself.
-
-r13: the cache is cleared at every query-slot boundary (see the pass
-loop), so each timed execution computes from the parquet inputs with a
-clean cache — the r12 verdict's session-state item. Measured before
-changing (OPTIMIZATION_r13.md §2): 60 persisted frames add NO drag
-to the control workload (dirty/clean 0.992), and a quiet r13 window
-read weather_divergence 1.03 under the OLD semantics — so the r12
-driver window's divergence 1.459 was the documented width bias of a
-stormy window, not cache drag. The clearing is therefore a
-measurement-honesty fix for the per-query numbers (no cross-query
-cache subsidy), not a control repair; timed-region methodology,
-min-of-3, the query set, and the JSON contract are unchanged.
-THE GATE REMAINS THE RAW NUMBER.
+The cache is cleared at every query-slot boundary (see the pass loop),
+so each timed execution computes from the parquet inputs with a clean
+cache; OPTIMIZATION_r13.md §2 records a window under each semantics.
+THE GATE IS THE RAW NUMBER: ``r3_equivalent_total`` is what gets diffed
+against the frozen 40.32 bar (``sf1_equivalent_total`` against 192.18
+at sf1); the normalized figure is secondary evidence.
 """
 
 from __future__ import annotations
@@ -109,22 +84,6 @@ BRANCHED: dict[str, tuple[str, dict[str, bool]]] = {
     }),
 }
 
-# The OTHER legitimate slot-growth class (r7 verdict's annotation
-# gap): slots whose SELECT column set grew after their historical
-# minimum round — same scan, more computed columns, so the whole-slot
-# ratio rises without any branch marginal to point at.
-# tools/minima_report.py annotates flags on these slots with the note
-# so the next judge doesn't re-adjudicate (the r6 worktree experiment
-# measured text_token_quality's r6-vs-r5-code delta at +0.12 s — the
-# excess is column growth, not regression). Map: query -> what grew.
-COLUMN_GROWN: dict[str, str] = {
-    "text_token_quality": (
-        "r4/r5 added model_quality, Gopher dup-2/3-gram fractions, and "
-        "PII counts + redacted-text md5 to the same single scan"
-    ),
-}
-
-
 # The FROZEN sf1 bar (round 6): SCALING_r6.json measured 192.18 s for
 # the full 50-query registry at fixtures/sf1 (min-of-3, quiet window).
 # Query slots that grew branches AFTER that freeze are excluded from
@@ -139,91 +98,15 @@ NEW_SINCE_SF1_FREEZE: set[tuple[str, str]] = {
 }
 
 
-# ---- Weather control (round 10) -------------------------------------
-# BENCH_r09's official window read 1.44x the frozen r3 bar while
-# SCALING_r9's within-run ratios (which cancel host weather) improved
-# and bench.py was byte-identical since the r8 commit — the r9 judge
-# accepted host-contention "weather" as the cause but flagged that the
-# story rested on adjudication, not measurement. This control makes
-# the weather measurable INSIDE every window: a pinned, code-frozen,
-# Spark-only synthetic (spark.range -> hash/sha2 project -> groupBy
-# shuffle -> sort -> noop) that touches none of this repo's operators,
-# run interleaved INSIDE each of the three query passes (every
-# CONTROL_EVERY queries). Its steady-state cost on a
-# quiet window is frozen below as CONTROL_REF_SEC; the emitted
-# `weather_ratio` = control_sec / CONTROL_REF_SEC, and
-# `r3_equivalent_normalized` = r3_equivalent / max(1, weather_ratio).
-# A clean window reports weather_ratio ~1.0 and normalized == raw; a
-# congested window inflates the control by the same host factor as
-# the queries (CPU + shuffle + scheduler are exactly what contention
-# taxes), so the normalized number stays comparable across rounds.
-#
-# Estimator design (r10, learned from three same-day windows): a
-# SINGLE short control leg per pass under-reads intermittent storms —
-# a 1.5 s probe sneaks into quiet gaps that 3–6 s queries cannot, so
-# window 3 read weather 1.09 while every query sat ~1.4× the bar. Two
-# countermeasures: (a) the control is sized to a TYPICAL query's
-# steady-state duration (~3 s — 48M rows), so it dodges exactly what
-# a query can dodge; (b) it runs every CONTROL_EVERY queries WITHIN
-# each pass, the pass's weather is the MEDIAN of its legs (a pass is
-# stormy if its typical moment is stormy), and the window's
-# weather_ratio takes the MIN across passes — mirroring the
-# min-of-passes semantics of every query number (a query's min comes
-# from its luckiest pass; the control's min-median estimates the
-# weather of the luckiest pass).
-#
-# CONTROL_REF_SEC calibration (r10, this box, local[32]): three
-# standalone 12-run batches at 48M rows (bench.py --control-only 12)
-# across ~25 min of a mixed-weather day: mins 2.952 / 2.337 / 2.231,
-# medians 3.625 / 2.518 / 2.692 (fresh-session runs need 3-4
-# executions to settle — JIT + first-shuffle setup — which the
-# in-bench warmup execution absorbs). The frozen constant is the
-# MEDIAN of the quietest batch (whose 11 settled runs sat tightly in
-# [2.34, 2.76] — genuine steady state), NOT the single lowest run:
-# the numerator below is a pass-MEDIAN, so the reference must be a
-# quiet-window median too — pairing a median numerator with a
-# min-of-everything denominator would overstate the weather and
-# flatter the normalized number. If the true quiet median is lower
-# still, the ratio under-normalizes — the honest direction.
-# Re-freezing requires a judge-visible note; the constant is part of
-# the metric.
-CONTROL_REF_SEC = 2.518
-CONTROL_ROWS = 48_000_000
-CONTROL_PARTS = 32
-CONTROL_EVERY = 10  # queries between in-pass control legs
-
-
-def control_workload(spark) -> float:
-    """One timed end-to-end execution of the pinned control plan.
-    Deterministic (no rand(), no input files — spark.range only), and
-    deliberately outside the package under test: its wall time moves
-    ONLY with host weather and Spark runtime health."""
-    from pyspark.sql import functions as F
-
-    t0 = time.time()
-    df = spark.range(0, CONTROL_ROWS, 1, CONTROL_PARTS)
-    d = df.select(
-        (F.xxhash64("id") % 997).alias("k"),
-        (F.xxhash64("id", F.lit(1)) % 1000003).alias("v"),
-        F.sha2(F.col("id").cast("string"), 256).alias("s"),
-    )
-    agg = d.groupBy("k").agg(
-        F.sum("v").alias("sv"), F.count("*").alias("c"), F.min("s").alias("m")
-    )
-    agg.orderBy("k").write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 3)
-
-
 class ExternalProbe:
     """Client for the out-of-process weather sampler
-    (tools/weather_probe.py --serve; see the r12 block in the module
-    docstring). burst(phase) is called right AFTER each in-session
-    control leg, while the Spark session sits idle — the two controls
-    sample the same between-queries moments, one inside the bench JVM
-    and one outside it. Failure-proof by design: if the probe can't
-    start or a burst times out, the probe retires itself and finish()
-    returns None — the window still stands on the in-session control;
-    the bench never breaks on account of its instrumentation."""
+    (tools/weather_probe.py --serve; see the module docstring).
+    burst(phase) is called in the idle gaps between timed queries.
+    Failure-proof by design: if a burst fails the probe retires itself
+    and finish() summarizes the bursts taken before; if none were taken
+    (the probe could not start) finish() returns None, the JSON lacks
+    the external fields and the raw numbers stand. The bench never
+    breaks on account of its instrumentation."""
 
     def __init__(self):
         #: phase -> list of per-burst medians (one entry per leg)
@@ -290,12 +173,12 @@ class ExternalProbe:
             return None
         from tools.weather_probe import EXT_REF_SEC
 
-        # the external analog of the in-session estimator: per-phase
-        # MEDIAN of the leg medians (a phase is stormy if its typical
-        # leg moment is), MIN across the main passes (each query's
-        # number comes from its luckiest pass); the branch phase keeps
-        # its own factor, min across its (re)runs — rule-for-rule the
-        # in-session weather computation, on out-of-JVM samples.
+        # per-phase MEDIAN of the leg medians (a phase is stormy if its
+        # typical leg moment is — a lone lucky burst must not whitewash
+        # it), MIN across the main passes (each query's number comes
+        # from its luckiest pass); the branch phase runs last and keeps
+        # its own factor. Ratios < 1 are clamped: a window luckier than
+        # the calibration floor must not deflate the reported number.
         phase_medians = {
             p: round(statistics.median(ls), 4) for p, ls in self.legs.items()
         }
@@ -333,39 +216,12 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    if "--control-only" in sys.argv:
-        # calibration mode: steady-state control runs (first = warmup,
-        # excluded), one time per line + a summary JSON line
-        control_workload(spark)
-        n = int(sys.argv[sys.argv.index("--control-only") + 1]) if (
-            sys.argv.index("--control-only") + 1 < len(sys.argv)
-            and sys.argv[sys.argv.index("--control-only") + 1].isdigit()
-        ) else 8
-        ts = []
-        for _ in range(n):
-            ts.append(control_workload(spark))
-            print(ts[-1], flush=True)
-        print(json.dumps({
-            "control_runs": ts, "min": min(ts),
-            "median": round(statistics.median(ts), 3),
-            "ref": CONTROL_REF_SEC,
-        }))
-        return
-
     qs = all_queries()
-
-    # r12: the external (separate-process) weather sampler covers the
-    # whole window on a fixed cadence; phase marks attribute samples
     probe = ExternalProbe()
 
     # Warmup: run the flagship once to pay JVM/codegen startup.
     warm = qs.get("flagship_pricing_join") or next(iter(qs.values()))
     warm(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Weather-control warmup: the control plan needs one execution to
-    # pay its own codegen/exchange setup before legs count
-    control_workload(spark)
-    control_legs: list[list[float]] = []
 
     # Three full passes, min per query: this box shows sporadic
     # host-level contention spikes on random queries; min-of-N is the
@@ -378,24 +234,18 @@ def main() -> None:
     # earlier rounds were estimating; per-query minima stay comparable
     # across rounds (Appendix: SURVEY §8 r4 variance note).
     #
-    # r13 measurement-semantics fix (the r12 verdict's #2, stated
-    # explicitly per the round contract; OPTIMIZATION_r13.md records a
-    # window under each semantics): through r12, queries that persist()
-    # intermediates left them in the cache manager and Spark
-    # substituted matching plan fragments on the NEXT pass — so the min
-    # was a warm-cache number that (a) undersold the query's real cost,
-    # (b) accumulated ~50 queries' cached partitions as ambient session
-    # state, and (c) let one query's cache subsidize another's timing.
-    # Now the cache is CLEARED at every query-slot boundary (below,
-    # OUTSIDE the timed region): every timed execution computes from
-    # the parquet inputs, and the min-of-3 estimates the cold-cache
-    # cost of the query in an otherwise-clean session. Within one timed
-    # execution persists still work exactly as the operators intend.
-    # (Measured first, OPTIMIZATION_r13.md §2: 60 cached frames
-    # add NO drag to the control — dirty/clean 0.992 — so this is an
-    # honesty fix for the QUERY numbers, not a control repair; the r12
-    # weather_divergence 1.459 was storm width-bias, see the module
-    # docstring.)
+    # Cold-slot semantics (r13; OPTIMIZATION_r13.md records a window
+    # under each): through r12, queries that persist() intermediates
+    # left them in the cache manager and Spark substituted matching
+    # plan fragments on the NEXT pass — so the min was a warm-cache
+    # number that (a) undersold the query's real cost, (b) accumulated
+    # ~50 queries' cached partitions as ambient session state, and (c)
+    # let one query's cache subsidize another's timing. Now the cache
+    # is CLEARED at every query-slot boundary (below, OUTSIDE the timed
+    # region): every timed execution computes from the parquet inputs,
+    # and the min-of-3 estimates the cold-cache cost of the query in an
+    # otherwise-clean session. Within one timed execution persists
+    # still work exactly as the operators intend.
     def _clear_query_state() -> None:
         spark.catalog.clearCache()
 
@@ -403,7 +253,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     for _pass in range(3):
-        legs: list[float] = []
         for qi, (name, fn) in enumerate(qs.items(), 1):
             t0 = time.time()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -412,25 +261,16 @@ def main() -> None:
             if name not in timings or el < timings[name]:
                 timings[name] = el
             spreads[name] = max(spreads.get(name, el), el)
-            # weather legs are interleaved WITHIN the pass so the
-            # control samples the same moments the queries ran in
-            if qi % CONTROL_EVERY == 0:
-                legs.append(control_workload(spark))
-                probe.burst(f"pass{_pass}")  # same idle moment, own process
-        if not legs:
-            legs.append(control_workload(spark))
+            if qi % 10 == 0:  # idle gap: sample the weather
+                probe.burst(f"pass{_pass}")
+        if len(qs) < 10:
             probe.burst(f"pass{_pass}")
-        control_legs.append(legs)
 
     # Adaptive extra pass: a >30% max/min spread across the three
     # passes means contention hit at least one — those queries (only)
     # get one more real execution. Bounded extra cost, and a spike that
-    # lands on every pass of a query no longer defines its number.
-    # r11: this pass gets its own interleaved control legs (the r10
-    # ADVICE gap — its executions can land minima, so its weather must
-    # be sampled like any other pass's); they join control_legs as a
-    # fourth pass when any re-timing happened.
-    adaptive_legs: list[float] = []
+    # lands on every pass of a query no longer defines its number. Its
+    # executions can land minima, so its weather is sampled too.
     n_retimed = 0
     for name, fn in qs.items():
         if spreads[name] > 1.3 * timings[name] and timings[name] > 0.5:
@@ -440,89 +280,55 @@ def main() -> None:
             _clear_query_state()  # same cold-slot semantics as the passes
             n_retimed += 1
             if n_retimed % 4 == 0:
-                adaptive_legs.append(control_workload(spark))
                 probe.burst("pass_adaptive")
-    if n_retimed:
-        if not adaptive_legs:
-            adaptive_legs.append(control_workload(spark))
-            probe.burst("pass_adaptive")
-        control_legs.append(adaptive_legs)
+    if 0 < n_retimed < 4:
+        probe.burst("pass_adaptive")
 
     # Per-branch pass: two timed executions per branch, min. The tag
     # filter prunes the other union legs, so each number is the
     # marginal steady-state cost of ONE strategy inside its slot.
     from pyspark.sql import functions as F
 
-    def run_branch_phase(
-        phase: str = "branch",
-    ) -> tuple[dict[str, dict[str, float]], list[float]]:
-        ph: dict[str, dict[str, float]] = {}
-        legs: list[float] = []
-        n_timed = 0
-        for name, (tag_col, branch_map) in BRANCHED.items():
-            if name not in qs:
-                continue
-            # r13: query-slot boundary — one query's cache must not
-            # subsidize another's branch timings. WITHIN the slot the
-            # branches still share the slot's persisted intermediates:
-            # a branch number is defined as the marginal steady-state
-            # cost of ONE strategy inside its slot (above), and that
-            # definition needs the shared index warm.
-            _clear_query_state()
-            ph[name] = {}
-            for b in branch_map:
-                best, worst = None, 0.0
-                for _ in range(2):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).where(
-                        F.col(tag_col) == b
-                    ).write.format("noop").mode("overwrite").save()
-                    el = round(time.time() - t0, 3)
-                    best = el if best is None or el < best else best
-                    worst = max(worst, el)
-                # same adaptive rule as the whole-slot passes: a >30%
-                # spread means contention hit at least one execution
-                if worst > 1.3 * best and best > 0.5:
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).where(
-                        F.col(tag_col) == b
-                    ).write.format("noop").mode("overwrite").save()
-                    best = min(best, round(time.time() - t0, 3))
-                ph[name][b] = best
-                n_timed += 1
-                # the branch phase runs at the END of the window —
-                # window 6 measured a storm that hit ONLY this phase,
-                # so it gets its own interleaved legs and its own
-                # weather factor. Every 4 timings (r11; was 8 — four
-                # legs under-sampled a ~30 s slice, the r10 verdict's
-                # estimator critique) → ≥8 legs per phase.
-                if n_timed % 4 == 0:
-                    legs.append(control_workload(spark))
-                    probe.burst(phase)
-        if not legs:
-            legs.append(control_workload(spark))
-            probe.burst(phase)
-        return ph, legs
-
-    # r11 min-semantics pairing (the r10 verdict's estimator fix): the
-    # branch numerators are min-of-executions, so a storm must not be
-    # NORMALIZED through when it can be DODGED like the main passes
-    # dodge one — when the phase's measured weather exceeds 2x, the
-    # whole phase re-runs once, each branch takes the min across
-    # phases, and the phase weather is the min of the phase medians
-    # (exactly the min-across-passes rule the whole-slot control uses).
-    branches, branch_legs = run_branch_phase()
-    branch_phase_legs: list[list[float]] = [branch_legs]
-    branch_median = statistics.median(branch_legs)
-    if branch_median / CONTROL_REF_SEC > 2.0:
-        re_branches, re_legs = run_branch_phase("branch_rerun")
-        for name in branches:
-            for b in branches[name]:
-                branches[name][b] = min(
-                    branches[name][b], re_branches[name][b]
-                )
-        branch_phase_legs.append(re_legs)
-        branch_median = min(branch_median, statistics.median(re_legs))
+    branches: dict[str, dict[str, float]] = {}
+    n_timed = 0
+    for name, (tag_col, branch_map) in BRANCHED.items():
+        if name not in qs:
+            continue
+        # query-slot boundary — one query's cache must not subsidize
+        # another's branch timings. WITHIN the slot the branches still
+        # share the slot's persisted intermediates: a branch number is
+        # defined as the marginal steady-state cost of ONE strategy
+        # inside its slot (above), and that definition needs the
+        # shared index warm.
+        _clear_query_state()
+        branches[name] = {}
+        for b in branch_map:
+            best, worst = None, 0.0
+            for _ in range(2):
+                t0 = time.time()
+                qs[name](spark, sf_dir).where(
+                    F.col(tag_col) == b
+                ).write.format("noop").mode("overwrite").save()
+                el = round(time.time() - t0, 3)
+                best = el if best is None or el < best else best
+                worst = max(worst, el)
+            # same adaptive rule as the whole-slot passes: a >30%
+            # spread means contention hit at least one execution
+            if worst > 1.3 * best and best > 0.5:
+                t0 = time.time()
+                qs[name](spark, sf_dir).where(
+                    F.col(tag_col) == b
+                ).write.format("noop").mode("overwrite").save()
+                best = min(best, round(time.time() - t0, 3))
+            branches[name][b] = best
+            n_timed += 1
+            # the branch phase runs at the END of the window — window 6
+            # measured a storm that hit ONLY this phase, so it gets its
+            # own bursts and its own weather factor (≥8 per phase)
+            if n_timed % 4 == 0:
+                probe.burst("branch")
+    if n_timed < 4:
+        probe.burst("branch")
 
     # The like-for-like round gate: the total over exactly the work
     # that existed at round 3 — whole-slot minima for unbranched
@@ -544,46 +350,13 @@ def main() -> None:
         else:
             r3_equiv += t
 
-    total = round(sum(timings.values()), 3)
-    # Weather normalization: per-pass MEDIAN of the interleaved legs
-    # (a pass is stormy if its typical moment is stormy — a lone
-    # lucky probe must not whitewash it), then MIN across passes
-    # (each query's number comes from its luckiest pass). Ratios < 1
-    # are clamped — a window luckier than the calibration floor must
-    # not deflate the reported number.
-    # statistics.median (r11): the old sorted[n//2] is the UPPER
-    # median on even-length leg lists — on r10's branch legs it read
-    # 12.19 where the true median was 8.05, flattering the normalized
-    # number (the r10 verdict's estimator critique).
-    pass_medians = [
-        round(statistics.median(legs), 3) for legs in control_legs
-    ]
-    control_sec = min(pass_medians)
-    weather = max(1.0, control_sec / CONTROL_REF_SEC)
-    # the branch phase has its OWN weather (it runs last; window 6
-    # caught a storm confined to it) — each slice of r3_equivalent is
-    # normalized by the weather measured where that slice was measured
-    branch_weather = max(1.0, branch_median / CONTROL_REF_SEC)
-    r3_norm = (
-        (r3_equiv - r3_equiv_branch_part) / weather
-        + r3_equiv_branch_part / branch_weather
-    )
     out = {
         "metric": "total_wall_sec_all_queries",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "branches": branches,
         "r3_equivalent_total": round(r3_equiv, 3),
-        "control_sec": control_sec,
-        "control_legs": control_legs,
-        "control_pass_medians": pass_medians,
-        "control_branch_legs": branch_phase_legs,
-        "branch_phase_reruns": len(branch_phase_legs) - 1,
-        "control_ref_sec": CONTROL_REF_SEC,
-        "weather_ratio": round(weather, 3),
-        "branch_weather_ratio": round(branch_weather, 3),
-        "r3_equivalent_normalized": round(r3_norm, 3),
         "sf": sf,
         "n_queries": len(timings),
     }
@@ -591,12 +364,7 @@ def main() -> None:
     if ext is not None:
         out["external_control"] = ext
         out["external_weather_ratio"] = ext["weather_ratio"]
-        # in-session / external: ~1 -> host weather explains the
-        # window; >>1 -> the slowdown lives inside the bench JVM
-        # (code-caused) and the normalized number is suspect
-        out["weather_divergence"] = round(
-            weather / ext["weather_ratio"], 3
-        )
+        # each slice divided by the weather where it was measured
         out["r3_equivalent_normalized_ext"] = round(
             (r3_equiv - r3_equiv_branch_part) / ext["weather_ratio"]
             + r3_equiv_branch_part / ext["branch_weather_ratio"],
@@ -607,24 +375,16 @@ def main() -> None:
         # except slots that grew post-freeze branches contribute only
         # their frozen branches' marginal timings
         sf1_equiv = 0.0
-        sf1_branch_part = 0.0
         for name, t in timings.items():
             new_bs = {b for (q, b) in NEW_SINCE_SF1_FREEZE if q == name}
             if new_bs and name in branches:
-                part = sum(
+                sf1_equiv += sum(
                     v for b, v in branches[name].items() if b not in new_bs
                 )
-                sf1_equiv += part
-                sf1_branch_part += part
             else:
                 sf1_equiv += t
         out["sf1_equivalent_total"] = round(sf1_equiv, 3)
         out["sf1_frozen_bar"] = SF1_FROZEN_BAR
-        out["sf1_equivalent_normalized"] = round(
-            (sf1_equiv - sf1_branch_part) / weather
-            + sf1_branch_part / branch_weather,
-            3,
-        )
     print(json.dumps(out))
 
 

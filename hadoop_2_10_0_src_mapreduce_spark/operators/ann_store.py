@@ -10,7 +10,10 @@ families share:
 
 - which family a directory holds (``family_of``);
 - tombstones: writing them (``delete_from_index``), the anti-join
-  every reader applies, and dropping them after compact/rebuild;
+  every reader applies, and dropping them after compact/rebuild; rows
+  and tombstones carry the write sequence that made them, so a
+  tombstone hides only rows written before it (delete, then re-append,
+  updates a vector);
 - the stored payload, encoded the way the stored schema already does
   (float cast to the stored element type, int8 ``qvec``+``scale``,
   packed or unpacked PQ codes), and decoded back for serving/rebuild;
@@ -38,6 +41,7 @@ All paths are local/NFS table dirs, the same documented scope as
 
 from __future__ import annotations
 
+import os
 import pathlib
 import shutil
 
@@ -314,20 +318,53 @@ def decode(rows: DataFrame, id_col: str, vec_col: str, keep=()) -> DataFrame:
     )
 
 
+def _next_seq(path: str) -> int:
+    """Hand out the index's next write sequence. ``<path>/write_seq``
+    keeps the last one (a missing file reads as 0); it survives
+    compaction, so one writer never draws a number twice. Two
+    concurrent writers may draw the same one: a tombstone then also
+    hides the same-numbered append, as every tombstone did before
+    rows carried a sequence."""
+    f = pathlib.Path(path) / "write_seq"
+    seq = int(f.read_text()) + 1 if f.exists() else 1
+    f.parent.mkdir(parents=True, exist_ok=True)
+    tmp = f.with_name(f"write_seq.{os.getpid()}")
+    tmp.write_text(str(seq))
+    os.replace(tmp, f)
+    return seq
+
+
+def _seq_of(df: DataFrame, col: str):
+    # rows and tombstones written before sequences existed read as 0
+    if col not in df.columns:
+        return F.lit(0).cast("bigint")
+    return F.coalesce(F.col(col), F.lit(0).cast("bigint"))
+
+
 def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
+    """(id, seq): each tombstoned id with its newest delete."""
     tomb = pathlib.Path(path) / "tombstones"
     if not tomb.exists():
         return None
-    return spark.read.parquet(pin_generation(str(tomb))).select("id").distinct()
+    t = spark.read.parquet(pin_generation(str(tomb)))
+    return t.groupBy("id").agg(F.max(_seq_of(t, "seq")).alias("seq"))
 
 
 def without_tombstones(rows: DataFrame, path: str, id_col: str) -> DataFrame:
-    """``rows`` minus the tombstoned ids — every read of live vectors
-    (serving, compaction, rebuild) goes through this one anti-join."""
+    """``rows`` minus those a tombstone hides: same id, written no
+    later than the delete (``_seq`` ≤ its ``seq``). Every read of live
+    vectors (serving, compaction, rebuild) goes through this one
+    anti-join."""
     tomb = _tombstones(rows.sparkSession, path)
     if tomb is None:
         return rows
-    return rows.join(tomb.withColumnRenamed("id", id_col), id_col, "left_anti")
+    tomb = tomb.select(F.col("id").alias("_tomb_id"), F.col("seq").alias("_tomb_seq"))
+    return rows.join(
+        tomb,
+        (F.col(id_col) == F.col("_tomb_id"))
+        & (_seq_of(rows, "_seq") <= F.col("_tomb_seq")),
+        "left_anti",
+    )
 
 
 def delete_from_index(
@@ -346,9 +383,13 @@ def delete_from_index(
 
     ``ids`` is a DataFrame carrying ``id_col`` (corpus-scale deletes
     stay distributed) or a plain Python iterable for the small case.
-    Tombstones are ids only, bounded by the delete volume, and the
-    serving anti-join is a broadcast-sized build side until deletes
-    grow corpus-scale, at which point compaction is overdue anyway."""
+    A tombstone is (id, write sequence): it hides the copies written
+    before it, never a later append of the same id — so "delete, then
+    append" updates a vector (an index whose rows predate the
+    ``_seq`` column hides every copy until it is rebuilt). Tombstones
+    are bounded by the delete volume, and the serving anti-join is a
+    broadcast-sized build side until deletes grow corpus-scale, at
+    which point compaction is overdue anyway."""
     if isinstance(ids, DataFrame):
         df = ids.select(F.col(id_col).alias("id")).distinct()
     else:
@@ -359,15 +400,22 @@ def delete_from_index(
         # pure-JVM VALUES relation instead of a pickled python RDD
         id_t = "bigint" if isinstance(rows[0][0], int) else "string"
         df = local_values_df(spark, rows, f"id {id_t}")
-    df.write.mode("append").parquet(f"{path}/tombstones")
+    df.withColumn("seq", F.lit(_next_seq(path)).cast("bigint")).write.mode(
+        "append"
+    ).parquet(f"{path}/tombstones")
 
 
 # --- lifecycle ---------------------------------------------------------------
 
 
-def _filed(fam: Family, vecs, meta, *, id_col, vec_col, **payload) -> DataFrame:
+def _filed(fam: Family, vecs, meta, *, id_col, vec_col, seq, **payload) -> DataFrame:
+    """Filed, encoded rows stamped with write sequence ``seq`` (None:
+    an index stored without sequences keeps its schema)."""
     filed = fam.assign(vecs, meta, id_col=id_col, vec_col=vec_col)
-    return fam.encode(filed, meta, id_col=id_col, vec_col=vec_col, **payload)
+    rows = fam.encode(filed, meta, id_col=id_col, vec_col=vec_col, **payload)
+    if seq is None:
+        return rows
+    return rows.withColumn("_seq", F.lit(seq).cast("bigint"))
 
 
 def build(fam: Family, emb: DataFrame, path: str, *, id_col: str = "vec_id",
@@ -377,7 +425,7 @@ def build(fam: Family, emb: DataFrame, path: str, *, id_col: str = "vec_id",
     meta, dirs = fam.train(vecs, id_col=id_col, vec_col=vec_col, **train)
     _write_meta(emb.sparkSession, path, fam, meta, swap=False)
     rows = _filed(fam, vecs, meta, id_col=id_col, vec_col=vec_col,
-                  **({"quantize": True} if quantize else {}))
+                  seq=_next_seq(path), **({"quantize": True} if quantize else {}))
     _write_rows(rows, path, fam, dirs, mode="overwrite")
 
 
@@ -397,8 +445,9 @@ def append(fam: Family, batch: DataFrame, path: str, *,
         payload = {"quantize": True}
     else:
         payload = {"vec_type": stored[vec_col].dataType}
+    seq = _next_seq(path) if "_seq" in names else None
     rows = _filed(fam, batch.select(id_col, vec_col), meta, id_col=id_col,
-                  vec_col=vec_col, **payload)
+                  vec_col=vec_col, seq=seq, **payload)
     _write_rows(rows, path, fam, row_dirs(path, fam), mode="append")
 
 
@@ -482,8 +531,10 @@ def rebuild(fam: Family, spark: SparkSession, path: str, *,
     try:
         meta, _ = fam.train(corpus, id_col=id_col, vec_col=vec_col, dirs=dirs,
                             **geometry)
+        # a fresh sequence: newer than every tombstone, so a crash
+        # before the tombstones are dropped hides nothing it kept
         _swap_rows(_filed(fam, corpus, meta, id_col=id_col, vec_col=vec_col,
-                          quantize=quantize), path, fam, dirs)
+                          seq=_next_seq(path), quantize=quantize), path, fam, dirs)
         _write_meta(spark, path, fam, meta, swap=True)
     finally:
         corpus.unpersist()

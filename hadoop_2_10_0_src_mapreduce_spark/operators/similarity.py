@@ -2297,7 +2297,8 @@ def append_to_ivf_index(
     second copy (compaction does not merge copies — it cannot know
     which vector is current). To UPDATE a vector,
     ``delete_from_index`` the id first, then append; the tombstone
-    hides the old copy immediately and compaction removes it."""
+    hides the old copy immediately (never the newer one) and
+    compaction removes it."""
     ann_store.append(IVF, new_emb, path, id_col=id_col, vec_col=vec_col)
 
 

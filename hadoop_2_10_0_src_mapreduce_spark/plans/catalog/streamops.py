@@ -93,8 +93,8 @@ def window_tumbling_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Module caching contract (same as the dedup/similarity persists):
     # the returned frame is lazy and still reads this cache, so it is
     # NOT unpersisted here — the blocks are evictable, and batch
-    # runners clear caches at query boundaries (bench.py r13 does;
-    # the r12 advice note on session-state accumulation).
+    # runners clear caches at query boundaries (bench.py does after
+    # every query slot).
     daily = tumbling_window_counts(ev).persist()
     metric = F.col("n_events").cast("double").alias("metric")
     tumbling = daily.select(

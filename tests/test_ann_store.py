@@ -4,7 +4,9 @@
 of the whole lifecycle: each family goes build → serve → append →
 delete → serve → compact → serve → rebuild → serve on a fixed corpus,
 and every served result is compared, order-insensitively, with a hash
-recorded before the families were folded into one store."""
+recorded before the families were folded into one store.
+``test_delete_then_append_updates_the_vector`` pins the update recipe:
+a tombstone hides only the copies written before it."""
 
 from __future__ import annotations
 
@@ -57,6 +59,16 @@ _FAMILIES = {
     ),
 }
 
+
+def _append(family, batch, path):
+    if family == "lsh":
+        similarity.append_to_lsh_index(batch, path)
+    elif family == "ivfpq":
+        pq.append_to_ivfpq_index(batch, path)
+    else:
+        similarity.append_to_ivf_index(batch, path)
+
+
 # served-result hashes after build, delete, compact and rebuild
 _PINNED = {
     "ivf": [
@@ -87,12 +99,7 @@ def test_lifecycle_serves_pinned_results(spark, emb, tmp_path, family):
     got = []
     build(corpus.where(F.col("vec_id") < 400), path)
     got.append(_served_hash(serve(queries, path)))
-    if family == "lsh":
-        similarity.append_to_lsh_index(corpus.where(F.col("vec_id") >= 400), path)
-    elif family == "ivfpq":
-        pq.append_to_ivfpq_index(corpus.where(F.col("vec_id") >= 400), path)
-    else:
-        similarity.append_to_ivf_index(corpus.where(F.col("vec_id") >= 400), path)
+    _append(family, corpus.where(F.col("vec_id") >= 400), path)
     similarity.delete_from_index(spark, path, [0, 3, 401])
     got.append(_served_hash(serve(queries, path)))
     if family == "lsh":
@@ -104,6 +111,37 @@ def test_lifecycle_serves_pinned_results(spark, emb, tmp_path, family):
     got.append(_served_hash(serve(queries, path)))
     spark.catalog.clearCache()
     assert got == _PINNED[family]
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_delete_then_append_updates_the_vector(spark, emb, tmp_path, family):
+    """Delete id 5, then append id 5 with a new vector (vec_id 450's,
+    which the index never held): querying with that vector serves id 5
+    after the append, after compaction and after rebuild. Tombstones
+    that hid every copy of the id would serve nothing for it, and
+    compaction would then drop the new copy."""
+    build, serve, rebuild = _FAMILIES[family]
+    path = str(tmp_path / family)
+    corpus = emb.select("vec_id", "embedding")
+    base = corpus.where(F.col("vec_id") < 400)
+    query = corpus.where(F.col("vec_id") == 450)
+    update = query.withColumn("vec_id", F.lit(5).cast(base.schema["vec_id"].dataType))
+    served = lambda: {
+        r.neighbor_id for r in serve(query, path).collect() if r.query_id == 450
+    }
+    build(base, path)
+    assert 5 not in served()
+    similarity.delete_from_index(spark, path, [5])
+    _append(family, update, path)
+    assert 5 in served()
+    if family == "lsh":
+        similarity.compact_lsh_index(spark, path)
+    else:
+        similarity.compact_ivf_index(spark, path)
+    assert 5 in served()
+    rebuild(spark, path, base.where(F.col("vec_id") != 5).unionByName(update))
+    assert 5 in served()
+    spark.catalog.clearCache()
 
 
 def test_lsh_index_reads_dim_from_vectors(spark, emb, tmp_path):

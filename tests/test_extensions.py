@@ -1926,8 +1926,12 @@ def test_compact_table_cluster_with_partition_dirs(spark, tmp_path):
     from hadoop_2_10_0_src_mapreduce_spark.sources.writers import compact_table
 
     t = str(tmp_path / "tbl")
+    # 32 input partitions whatever the core count: compact_table sizes
+    # n from the on-disk footprint, which carries a footer per input
+    # file, and range-aligned tasks over |p| directories write up to
+    # n + |p| - 1 files, inside 2n only while n >= |p| - 1
     for b in range(4):
-        spark.range(0, 800).select(
+        spark.range(0, 800, 1, 32).select(
             (F.col("id") % 4).alias("p"), (F.col("id") * 4 + b).alias("k")
         ).write.mode("append").partitionBy("p").parquet(t)
     n = compact_table(

@@ -1031,35 +1031,6 @@ def test_foreign_symlink_refused_by_pointer_swap(spark, tmp_path):
     assert spark.read.parquet(link).count() == 5  # untouched
 
 
-def test_minima_report_extracts_all_bench_shapes(tmp_path):
-    """tools/minima_report must read every shape a BENCH file takes:
-    bench.py's own line, the driver wrapper with `parsed`, and the
-    truncated-tail wrapper (r5/r6) — recovering complete query pairs
-    before "branches" and never mistaking totals for queries."""
-    from tools.minima_report import _extract
-
-    own = {"queries": {"q1": 1.0, "q2": 2.0}, "sf": 0.1}
-    assert _extract(own) == ({"q1": 1.0, "q2": 2.0}, 0.1)
-
-    wrapped = {"sf": 0.1, "parsed": {"queries": {"q1": 3.0}, "sf": 0.1}}
-    assert _extract(wrapped) == ({"q1": 3.0}, 0.1)
-
-    tail = {
-        "sf": 0.1,
-        "parsed": None,
-        "tail": 'stats": 0.3, "q_whole": 1.5, "value": 65.0, '
-                '"r3_equivalent_total": 52.0}, "branches": {"q_whole": '
-                '{"a": 0.7}}, "sf": 0.1}',
-    }
-    qs, sf = _extract(tail)
-    # the head pair is CUT (no opening quote: "stats" could be the
-    # tail of any longer name) and is rightly dropped; totals are
-    # filtered; branch sub-timings (after "branches") never parsed
-    assert qs == {"q_whole": 1.5}
-    assert sf == 0.1
-    assert _extract({"tail": "no pairs here"}) == (None, None)
-
-
 def test_rebuild_keeps_pointer_mode_serving(spark, emb, tmp_path):
     """An IVF index whose lists were converted to pointer mode keeps
     its blink-free layout through rebuild_ivf_index: the lists swap

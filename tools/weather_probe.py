@@ -1,35 +1,30 @@
-"""External host-weather probe — a SEPARATE OS process from the bench.
+"""External host-weather probe — a SEPARATE OS process from the bench,
+and bench.py's only weather estimator.
 
-Why this exists (r12, the standing r10/r11 ADVICE medium): bench.py's
-in-session weather control shares the Spark session with the queries
-it normalizes, so a CODE-caused slowdown that taxes the whole JVM —
-GC pressure from a leaked cache, a bloated cache manager, python
-worker churn — inflates the control exactly like host contention and
-is normalized away. This probe runs in its own process with its own
-interpreter and NO JVM: nothing the engine's code does to the bench
-session can touch it. When the in-session control reads stormy and
-this probe reads quiet, the slowdown lives INSIDE the session (code);
-when both read stormy, it's the host.
+Why out of process: an estimator that shares the Spark session with
+the queries it normalizes is inflated by a CODE-caused slowdown that
+taxes the whole JVM — GC pressure from a leaked cache, a bloated cache
+manager, python worker churn — exactly like host contention, and would
+normalize it away. This probe runs with its own interpreter and NO
+JVM: nothing the engine's code does to the bench session can touch it,
+so such a slowdown stays visible in the raw query numbers.
 
 What it measures, honestly stated: a single-threaded, deterministic
 CPU + memory-bandwidth workload (sha256 over a fixed buffer + a fixed
-numpy sort). Sampling design (r12, measured): the first cut sampled
-on a fixed cadence for the whole window — and read weather 3.4-9x
-while the in-session control read 1.17, because during query
-execution the bench's own 32-wide stages saturate the box and the
-probe cannot tell legitimate bench CPU from host contention. So the
-probe is TRIGGERED instead (``--serve`` mode): bench.py asks for a
-short burst right after each in-session control leg, while the Spark
-session sits idle — the two controls then sample the SAME
-between-queries moments, one inside the bench JVM and one outside
-it, and their ratio isolates session-internal slowdown from host
-weather. Burst cost ~1.2 s per leg point, outside every timed query.
+numpy sort). Sampling design (measured): a first cut sampled on a
+fixed cadence for the whole window and read weather 3.4-9x where
+the between-queries samples read 1.17, because during query
+execution the bench's own wide stages saturate the box and the probe
+cannot tell legitimate bench CPU from host contention. So the probe is TRIGGERED
+instead (``--serve`` mode): bench.py asks for a short burst in the
+idle gaps between timed queries (every 10 queries per pass, every 4
+branch timings). Burst cost ~1.2 s per point, outside every timed
+query.
 
-Calibration (this box, 2026-08-16, r12): EXT_REF_SEC is frozen the
-same way bench.py froze CONTROL_REF_SEC — the MEDIAN of the quietest
-standalone batch (``--calibrate``), not the single lowest sample.
-Re-freezing requires a judge-visible note; the constant is part of
-the metric.
+Calibration (2026-08-16, on the host that set the r12 bench
+windows): EXT_REF_SEC is the MEDIAN of the quietest standalone batch
+(``--calibrate``), not the single lowest sample. Re-freezing requires
+a judge-visible note; the constant is part of the metric.
 
 Usage:
     python tools/weather_probe.py --serve [--burst 3]   # triggered mode
@@ -51,9 +46,9 @@ import time
 import numpy as np
 
 # Frozen quiet-floor for one probe sample (see module docstring).
-# Calibrated r12 (this box, 2026-08-16): three standalone 16-sample
-# batches, medians 0.398 / 0.389 / 0.403 — the quietest batch's
-# median is frozen, mirroring bench.py's CONTROL_REF_SEC convention.
+# Calibrated 2026-08-16: three standalone 16-sample batches, medians
+# 0.398 / 0.389 / 0.403 — the quietest batch's median is frozen (a
+# median, because the bench's per-phase weather is a median too).
 # Every batch ALSO showed periodic ~1.1-3.9 s spikes on ~every 6th
 # sample (a recurring host burst a 1-thread probe resolves cleanly);
 # the median is the right center for exactly that reason.
