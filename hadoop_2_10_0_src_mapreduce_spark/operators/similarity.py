@@ -43,15 +43,19 @@ caller needs:
   pairs (hot buckets capped deterministically) and rescored through
   the exact-sequential join-back — slightly more shuffle than block
   scoring, in exchange for bit-exact oracle verifiability of the
-  whole query.
+  whole query. SemDeDup (``semantic_dedup``) scores and clusters each
+  k-means home cell in one group of the same kind, on the same block
+  grid (``_block_grid``): every pair lies inside one cell, so the
+  cell's block yields its pairs and its clusters with no pair table.
 
-Caching contract: the ANN paths ``persist()`` their multiply-read
-intermediates (capped bucket memberships, probe assignments) and do
-NOT unpersist them — the returned DataFrame is lazy and still reads
-those frames, and repeated calls in one session reuse the warm blocks.
-They are evictable MEMORY_AND_DISK blocks, so they degrade rather
-than leak; call ``spark.catalog.clearCache()`` at a batch boundary to
-release them deliberately.
+Caching contract: the LSH and IVF paths ``persist()`` their
+multiply-read intermediates (bucket memberships, probe assignments)
+and do NOT unpersist them — the returned DataFrame is lazy and still
+reads those frames, and repeated calls in one session reuse the warm
+blocks. They are evictable MEMORY_AND_DISK blocks, so they degrade
+rather than leak; call ``spark.catalog.clearCache()`` at a batch
+boundary to release them deliberately. The SemDeDup pass caches
+nothing.
 """
 
 from __future__ import annotations
@@ -1391,7 +1395,12 @@ def train_ivf_centroids(
         sample = sample.where(
             md5_u32(F.col(id_col).cast("string")) % F.lit(stride) == 0
         )
-    pdf = sample.orderBy(id_col).toPandas()
+    # the sample is bounded, so sort it here: one collect job instead
+    # of a range-partitioned orderBy (sampling + shuffle + collect);
+    # nulls first, like Spark's ascending order
+    pdf = sample.toPandas().sort_values(
+        id_col, kind="stable", na_position="first"
+    )
     ids = pdf[id_col].to_numpy()
     mat = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
     return _kmeans_spherical(ids, mat, n_centroids, n_iters)
@@ -1485,6 +1494,18 @@ def ivf_assign(
     return emb.mapInPandas(batches, f"{out_schema}, list_id int, probe_rank int")
 
 
+def _block_grid(
+    rows: DataFrame, id_col: str, n: Column, block_size: int
+) -> DataFrame:
+    """The block grid every bounded grouped scorer shares: a list of
+    ``n`` rows splits into ``_nb`` = ⌈n / block_size⌉ blocks, and each
+    row's own block is ``_own`` = pmod(xxhash64(id), _nb)."""
+    nb = F.ceil(n / F.lit(block_size)).cast("int")
+    return rows.withColumn("_nb", nb).withColumn(
+        "_own", F.pmod(F.xxhash64(F.col(id_col)), F.col("_nb")).cast("int")
+    )
+
+
 def _shard_blocks(
     assigned: DataFrame, id_col: str, block_size: int, *,
     self_query: bool = True,
@@ -1504,12 +1525,11 @@ def _shard_blocks(
     list — the same order as the scoring work itself, paid as shuffle
     rows instead of one executor's memory."""
     counts = assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("_n"))
-    sharded = (
-        assigned.join(F.broadcast(counts), "list_id")
-        .withColumn("_nb", F.ceil(F.col("_n") / F.lit(block_size)).cast("int"))
-        .withColumn(
-            "_own", F.pmod(F.xxhash64(F.col(id_col)), F.col("_nb")).cast("int")
-        )
+    sharded = _block_grid(
+        assigned.join(F.broadcast(counts), "list_id"),
+        id_col,
+        F.col("_n"),
+        block_size,
     )
     grid = F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))
     corpus_side = (
@@ -1670,6 +1690,118 @@ def _score_assigned(
     return _global_topk(per_block, k)
 
 
+# Rows per side of one SemDeDup scoring block. A home cell larger than
+# this is split on the ``_block_grid`` grid, so no pandas group holds
+# more than ~2·SEMDEDUP_BLOCK rows (the ``ann_ivf_topk`` default).
+SEMDEDUP_BLOCK = 4096
+
+
+def _semdedup_cells(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_centroids: int | str,
+    corpus_count: int | None,
+) -> tuple[DataFrame, bool]:
+    """The grouped input of the SemDeDup pass: every vector filed in its
+    md5-seeded k-means home cell (``ivf_assign``, vector kept) and laid
+    on the block grid. Returns (rows, split): rows carry (id, vec,
+    list_id, _nb, _own, cb, qb), grouped by (list_id, cb, qb); ``split``
+    says whether any cell spans more than one block.
+
+    A cell of ``_nb`` blocks sends each row to the block pairs
+    (min(own, b), max(own, b)) for every block b: the upper triangle of
+    the ``_shard_blocks`` grid, since cosine is symmetric. Two rows of
+    one cell meet in exactly one group, and an unsplit cell is one
+    group holding each of its vectors once."""
+    if corpus_count is None:
+        # one count serves the cell rule, the trainer's stride and the
+        # split test
+        corpus_count = emb.count()
+    n_centroids = _resolve_centroids(emb, n_centroids, n=corpus_count)
+    vecs = emb.select(id_col, vec_col)
+    cents = train_ivf_centroids(
+        vecs, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
+        n=corpus_count,
+    )
+    home = ivf_assign(
+        vecs, cents, vec_col=vec_col, n_probe=1, keep_vec=True
+    ).drop("probe_rank")
+    if corpus_count <= SEMDEDUP_BLOCK:
+        # no cell can hold more rows than the corpus: one block each
+        size, split = F.lit(corpus_count), False
+    else:
+        sizes = home.groupBy("list_id").count().collect()
+        size = F.element_at(
+            F.create_map(*[F.lit(v) for r in sizes for v in (r[0], r[1])]),
+            F.col("list_id"),
+        )
+        split = max(r[1] for r in sizes) > SEMDEDUP_BLOCK
+    rows = _block_grid(home, id_col, size, SEMDEDUP_BLOCK).withColumn(
+        "_b", F.explode(F.sequence(F.lit(0), F.col("_nb") - 1))
+    )
+    rows = rows.select(
+        "*",
+        F.least("_own", "_b").alias("cb"),
+        F.greatest("_own", "_b").alias("qb"),
+    ).drop("_b")
+    return rows, split
+
+
+def _cell_pairs(
+    pdf: pd.DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    round_digits: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """One (list, cb, qb) group's pairs at sim ≥ ``threshold``: (ids
+    ascending, lo, hi, sim) with lo < hi indexing ``ids``. A diagonal
+    group scores its rows against each other; an off-diagonal one
+    scores block cb's rows against block qb's. The cosine is
+    ``_pairs_topk``'s: sequential dots and norms (``_seq_matdot`` /
+    ``_seq_sq_norms``) and half-away-from-zero rounding, bit-identical
+    to the JVM and DuckDB paths."""
+    pdf = pdf.sort_values(id_col, kind="stable")
+    ids = pdf[id_col].to_numpy()
+    mat = _vec_matrix(pdf, vec_col)
+    cb, qb = pdf["cb"].iat[0], pdf["qb"].iat[0]
+    if cb == qb:
+        a = b = np.arange(len(ids))
+    else:
+        own = pdf["_own"].to_numpy()
+        a, b = np.flatnonzero(own == cb), np.flatnonzero(own == qb)
+    nrm = np.sqrt(_seq_sq_norms(mat))
+    # a zero-norm vector makes 0/0 = NaN, as in the SQL paths
+    with np.errstate(invalid="ignore", divide="ignore"):
+        sims = _seq_matdot(mat[a], mat[b]) / np.outer(nrm[a], nrm[b])
+    scale = 10.0**round_digits
+    sims = np.copysign(np.floor(np.abs(sims) * scale + 0.5), sims) / scale
+    # Spark and DuckDB order NaN above every number, so NaN passes τ
+    hit = (sims >= threshold) | np.isnan(sims)
+    if cb == qb:
+        hit = np.triu(hit, 1)
+    i, j = np.nonzero(hit)
+    i, j = a[i], b[j]
+    return ids, np.minimum(i, j), np.maximum(i, j), sims[hit]
+
+
+def _min_labels(n: int, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """Connected components of an n-node edge list, numpy only: the
+    min-label propagation with pointer jumping of
+    ``dedup.duplicate_components``. Each node ends labelled with the
+    smallest node index it reaches."""
+    lab = np.arange(n)
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, lo, lab[hi])
+        np.minimum.at(nxt, hi, lab[lo])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, lab):
+            return lab
+        lab = nxt
+
+
 def semantic_dedup_pairs(
     emb: DataFrame,
     *,
@@ -1680,66 +1812,38 @@ def semantic_dedup_pairs(
     round_digits: int = 6,
     corpus_count: int | None = None,
 ) -> DataFrame:
-    """SemDeDup-style SEMANTIC duplicate pairs: spherical-k-means
-    cluster the corpus (the oracle-exact IVF trainer — md5-seeded,
-    sequential float reductions), generate candidate pairs only WITHIN
-    each home list, rescore them exactly, and keep pairs with cosine ≥
-    ``threshold``. The within-cluster restriction IS the published
-    recipe's approximation: semantically-duplicate points land in the
-    same k-means cell, so cross-cell pairs — the quadratic bulk — are
-    never generated. Identical vectors always share a home list (same
-    dots, same stable argmax), so exact copies are found with
-    recall 1.
+    """SemDeDup-style SEMANTIC duplicate pairs (id_a < id_b, sim ≥
+    ``threshold``): spherical-k-means cluster the corpus (the
+    oracle-exact IVF trainer — md5-seeded, sequential float
+    reductions), then score each home cell in one grouped pass. The
+    within-cell restriction IS the published recipe's approximation:
+    semantically-duplicate points land in the same k-means cell, so
+    cross-cell pairs — the quadratic bulk — are never scored.
+    Identical vectors always share a home cell (same dots, same stable
+    argmax), so exact copies are found with recall 1.
 
-    Deterministic and engine-replayable end to end (training,
-    assignment, and the sequential cosine all match the DuckDB twin
-    the catalog registers), so an external oracle can recompute the
-    entire pair set — approximation included.
+    Each vector travels to its cell's group once; the group computes
+    the cell's similarity block in numpy (``_cell_pairs``) and emits
+    only the pairs at or above ``threshold``. Deterministic and
+    engine-replayable end to end (training, assignment and the
+    sequential cosine all match the DuckDB twin the catalog registers).
 
-    Scale shape: candidate volume is Σ(list size)² — quadratic per
-    CELL, by construction of the algorithm; ``n_centroids="auto"``
-    (``adaptive_centroids`` over a corpus count) holds E[list] ≈
-    constant so total pair volume stays LINEAR in n — the scale-safe
-    setting (a fixed cell count measured 18× wall for 10× data at the
-    sf1 gate; SemDeDup at web scale runs c ~ √n or larger for the
-    same reason). Only (id, list_id) rows enter the self-join;
-    vectors join back where they live via the Arrow scorer, so a hot
-    cell costs shuffle rows, never executor memory.
+    Scale shape: pair work is Σ(cell size)² — quadratic per CELL, by
+    construction of the algorithm; ``n_centroids="auto"``
+    (``adaptive_centroids`` over a corpus count) holds E[cell] ≈
+    constant, so total work stays LINEAR in n. A cell larger than
+    ``SEMDEDUP_BLOCK`` rows is split on the ``_block_grid`` grid, so a
+    hot cell costs more groups, never more executor memory. Nothing is
+    cached."""
+    rows, _ = _semdedup_cells(emb, id_col, vec_col, n_centroids, corpus_count)
+    id_type = {f.name: f.dataType.simpleString() for f in emb.schema.fields}[id_col]
 
-    Caching: the home-list assignment is ``persist()``-ed and stays
-    referenced by the returned lazy frame (module caching contract) —
-    long-lived sessions done with the results should
-    ``spark.catalog.clearCache()`` at their batch boundary."""
-    # one count() serves the adaptive-centroid rule AND the trainer's
-    # stride (two identical jobs before; ``corpus_count`` lets the
-    # caller share an already-paid count too)
-    if corpus_count is None and n_centroids == "auto":
-        corpus_count = emb.count()
-    n_centroids = _resolve_centroids(emb, n_centroids, n=corpus_count)
-    vecs = emb.select(id_col, vec_col)
-    cents = train_ivf_centroids(
-        vecs, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
-        n=corpus_count,
-    )
-    # persist: both sides of the within-list self-join read the
-    # assignment; without it the mapInPandas subtree runs twice
-    home = (
-        ivf_assign(vecs, cents, vec_col=vec_col, n_probe=1)
-        .where(F.col("probe_rank") == 0)
-        .persist()
-    )
-    a = home.select(F.col(id_col).alias("query_id"), "list_id")
-    b = home.select(F.col(id_col).alias("neighbor_id"), "list_id")
-    cands = (
-        a.join(b, "list_id")
-        .where(F.col("query_id") < F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-    )
-    scored = _score_pairs_arrow(emb, cands, id_col, vec_col, round_digits)
-    return scored.where(F.col("sim") >= threshold).select(
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        "sim",
+    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, lo, hi, sims = _cell_pairs(pdf, id_col, vec_col, threshold, round_digits)
+        return pd.DataFrame({"id_a": ids[lo], "id_b": ids[hi], "sim": sims})
+
+    return rows.groupBy("list_id", "cb", "qb").applyInPandas(
+        pairs, f"id_a {id_type}, id_b {id_type}, sim double"
     )
 
 
@@ -1752,24 +1856,47 @@ def semantic_dedup(
     n_centroids: int | str = 16,
     corpus_count: int | None = None,
 ) -> DataFrame:
-    """Cluster membership view of ``semantic_dedup_pairs``: connected
-    components over the pair graph → (id, rep) with rep = the smallest
-    id reachable — keep rep, drop the rest, exactly like the text-side
-    duplicate clustering. Only ids participating in some pair appear;
-    everything else is implicitly its own keeper."""
+    """SemDeDup duplicate clusters: (id, rep) with rep = the smallest id
+    reachable through the pairs of ``semantic_dedup_pairs`` — keep rep,
+    drop the rest, exactly like the text-side duplicate clustering.
+    Only ids in some pair appear; everything else is implicitly its own
+    keeper.
+
+    Every pair lies inside one home cell, so every cluster does too:
+    a cell that fits in one group (``SEMDEDUP_BLOCK`` rows) is scored
+    AND clustered in that group (``_min_labels``), with no pair table
+    and no global loop. A larger cell is split on the block grid; its
+    groups emit forest edges (id → smallest id reached in that group),
+    O(rows) rather than O(pairs), and only those edges go through
+    ``dedup.duplicate_components``. So the checkpointed components loop
+    runs only when some cell was split. Nothing is cached."""
+    rows, split = _semdedup_cells(emb, id_col, vec_col, n_centroids, corpus_count)
+    id_type = {f.name: f.dataType.simpleString() for f in emb.schema.fields}[id_col]
+
+    def labelled(part: DataFrame, *, edges: bool) -> DataFrame:
+        def labels(pdf: pd.DataFrame) -> pd.DataFrame:
+            ids, lo, hi, _ = _cell_pairs(
+                pdf, id_col, vec_col, threshold, round_digits=6
+            )
+            lab = _min_labels(len(ids), lo, hi)
+            keep = np.unique(np.concatenate([lo, hi]))
+            if edges:  # the group's own min needs no edge to itself
+                keep = keep[lab[keep] != keep]
+            return pd.DataFrame({"id": ids[keep], "rep": ids[lab[keep]]})
+
+        return part.groupBy("list_id", "cb", "qb").applyInPandas(
+            labels, f"id {id_type}, rep {id_type}"
+        )
+
+    if not split:
+        return labelled(rows, edges=False)
     from hadoop_2_10_0_src_mapreduce_spark.operators.dedup import (
         duplicate_components,
     )
 
-    pairs = semantic_dedup_pairs(
-        emb,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        n_centroids=n_centroids,
-        corpus_count=corpus_count,
-    )
-    return duplicate_components(pairs)
+    whole = labelled(rows.where(F.col("_nb") == 1), edges=False)
+    forest = labelled(rows.where(F.col("_nb") > 1), edges=True)
+    return whole.unionByName(duplicate_components(forest, id_a="id", id_b="rep"))
 
 
 # --- persisted indexes: the IVF and LSH families of ann_store -----------

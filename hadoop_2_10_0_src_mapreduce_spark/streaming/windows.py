@@ -627,14 +627,15 @@ def stream_index_vectors(
     Per micro-batch: in-batch id dedup, then the same shuffle-free
     membership test as the streaming corpus dedup
     (``dedup.filter_novel_fps`` keyed on the id — the index side is
-    scanned column-pruned to ids only and NEVER enters an exchange),
+    scanned column-pruned to ids and write sequences, tombstoned rows
+    removed, and NEVER enters an exchange),
     then ``append_to_ivf_index`` files only the novel vectors under
     the fixed centroids. The novel set is eagerly checkpointed
     (``localCheckpoint`` by default; reliable parquet pin when
     ``pin_dir`` is set — same cleanup contract as the corpus-dedup
     stream) before the append for the same read-before-append lineage race the
-    corpus dedup documents. Ids are the identity: a vector id seen in
-    any earlier batch (or the offline build) is dropped, which makes
+    corpus dedup documents. Ids are the identity: a vector id the index
+    serves (from an earlier batch or the offline build) is dropped, which makes
     replays idempotent — at-least-once foreachBatch re-runs find
     nothing novel. To UPDATE a vector, tombstone it out of band
     (``delete_from_index``) and let the next batch re-add it.
@@ -666,7 +667,10 @@ def stream_index_vectors(
         # the index must exist: its metadata defines where vectors file
         fam = ann_store.family_of(index_path)
         stored, sid = ann_store.read_rows(s, index_path, fam)
-        seen = stored.select(F.col(sid).alias(id_col))
+        # a tombstoned id is not seen: a stream may re-add it
+        seen = ann_store.without_tombstones(stored, index_path, sid).select(
+            F.col(sid).alias(id_col)
+        )
         pin = RoundCheckpointer(
             s, f"{pin_dir}/batch-{batch_id}" if pin_dir else None
         )

@@ -373,13 +373,17 @@ def test_local_checkpoints_released_like_reliable_steps(spark):
     runs, and a failed loop releases all of them. clearCache() does not
     reach these RDDs, so without that bookkeeping they stay persistent
     for the session."""
-    from hadoop_2_10_0_src_mapreduce_spark.plans.registry import all_queries
-    from tests.conftest import SF_MED
-
     jsc = spark.sparkContext._jsc
     persistent = lambda: set(jsc.getPersistentRDDs().keys())
     before = persistent()
-    all_queries()["sim_near_dup_embeddings"](spark, SF_MED).collect()
+    # a 12-node path: several rounds, each superseding the last step
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], ["id_a", "id_b"]
+    )
+    stats = {}
+    labels = dedup.duplicate_components(path, stats=stats).collect()
+    assert stats["rounds"] >= 2
+    assert {r.rep for r in labels} == {0} and len(labels) == 12
     spark.catalog.clearCache()
     # at most the final step, which backs the returned frame
     assert len(persistent() - before) <= 1
@@ -1488,6 +1492,106 @@ def test_semantic_dedup_finds_planted_copies(spark):
         assert comp.get(copy_id) == copy_id - 10000  # copy → original
     # pairs are symmetric members of the same cluster
     assert all(rep <= i for i, rep in comp.items())
+
+
+def _semdedup_corpus(spark):
+    """Random 16-d vectors, exact copies of some, and two chains of unit
+    vectors 15° apart in a plane: cos 15° ≈ 0.966 ≥ 0.95 > cos 30°, so a
+    chain is one cluster only through its consecutive pairs."""
+    import math
+
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    rows = [(i, rng.normal(size=16).tolist()) for i in range(60)]
+    rows += [(100 + i, rows[i][1]) for i in range(0, 60, 6)]
+    for c, (x, y) in enumerate([(0, 1), (2, 3)]):
+        for k in range(9):
+            v = [0.0] * 16
+            v[x], v[y] = math.cos(math.radians(15 * k)), math.sin(math.radians(15 * k))
+            rows.append((200 + 20 * c + (k * 7) % 9, v))
+    return rows, spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _brute_semdedup(rows, threshold):
+    """Every pair at cosine ≥ threshold, and (id, smallest id reachable)
+    by union-find — one home cell, no blocks."""
+    import numpy as np
+
+    ids = [r[0] for r in rows]
+    mat = np.array([r[1] for r in rows])
+    unit = mat / np.linalg.norm(mat, axis=1)[:, None]
+    sims = unit @ unit.T
+    pairs = set()
+    for i in range(len(ids)):
+        for j in range(i + 1, len(ids)):
+            # no sim this close to τ, so summation order cannot flip it
+            assert abs(sims[i, j] - threshold) > 1e-6
+            if sims[i, j] >= threshold:
+                pairs.add((min(ids[i], ids[j]), max(ids[i], ids[j])))
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return pairs, {x: find(x) for a, b in pairs for x in (a, b)}
+
+
+def test_semantic_dedup_split_cells_match_unsplit_and_brute_force(
+    spark, monkeypatch
+):
+    """A cell larger than SEMDEDUP_BLOCK is scored on the block grid and
+    clustered through forest edges + duplicate_components; the pairs and
+    the (id, rep) labels equal the whole-cell pass and a numpy brute
+    force, with one cell and with several."""
+    rows, corpus = _semdedup_corpus(spark)
+    want_pairs, want = _brute_semdedup(rows, 0.95)
+    # clusters joined through more than one hop, not only cliques
+    assert any(
+        want[a] == want[b] and (a, b) not in want_pairs
+        for a in want for b in want if a < b
+    )
+
+    def run(n_centroids):
+        pairs = similarity.semantic_dedup_pairs(
+            corpus, threshold=0.95, n_centroids=n_centroids
+        ).collect()
+        labels = similarity.semantic_dedup(
+            corpus, threshold=0.95, n_centroids=n_centroids
+        ).collect()
+        return {(r.id_a, r.id_b) for r in pairs}, {r.id: r.rep for r in labels}
+
+    whole = {n: run(n) for n in (1, 4)}
+    monkeypatch.setattr(similarity, "SEMDEDUP_BLOCK", 8)  # every cell splits
+    split = {n: run(n) for n in (1, 4)}
+    assert whole[1] == split[1] == (want_pairs, want)
+    assert whole[4] == split[4]
+
+
+def test_semantic_dedup_pile_up_larger_than_a_block(spark, monkeypatch):
+    """30 identical vectors in one cell of 8-row blocks: every block pair
+    sees part of the pile, and the forest edges join it into one
+    cluster with one rep."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    pile = [1.0] * 16
+    rows = [(50 + 3 * i, pile) for i in range(30)]
+    rows += [(i, rng.normal(size=16).tolist()) for i in range(20)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    monkeypatch.setattr(similarity, "SEMDEDUP_BLOCK", 8)
+    got = {
+        r.id: r.rep
+        for r in similarity.semantic_dedup(
+            corpus, threshold=0.95, n_centroids=1
+        ).collect()
+    }
+    assert got == {i: 50 for i in range(50, 140, 3)}
 
 
 def test_hash_embeddings_compose_with_semantic_dedup(spark):

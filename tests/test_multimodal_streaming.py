@@ -1035,6 +1035,43 @@ def test_stream_index_vectors_appends_novel_and_serves(spark, tmp_path_factory):
     assert [r.neighbor_id for r in got.collect()] == [302]
 
 
+def test_stream_readds_a_tombstoned_id(spark, tmp_path_factory):
+    """Deleting an id and streaming it back with a new vector updates
+    it: the novel-id filter does not count tombstoned rows as seen, so
+    the new vector is appended and served before any compaction."""
+    import json
+    import math
+
+    from hadoop_2_10_0_src_mapreduce_spark.operators import similarity
+
+    base = tmp_path_factory.mktemp("stream_readd")
+    src = base / "vecs"
+    src.mkdir()
+    idx = str(base / "index")
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    similarity.save_ivf_index(
+        emb.where(F.col("vec_id") < 300), idx, n_centroids=8
+    )
+    dim = len(emb.take(1)[0].embedding)
+    new_vec = [math.cos(0.7), math.sin(0.7)] + [0.0] * (dim - 2)
+
+    similarity.delete_from_index(spark, idx, [7])
+    (src / "w1.json").write_text(json.dumps({"vec_id": 7, "embedding": new_vec}))
+    q = sw.stream_index_vectors(
+        spark, str(src), "vec_id long, embedding array<double>", idx,
+        checkpoint_dir=str(base / "ckpt"),
+    )
+    q.awaitTermination(120)
+    stored = spark.read.parquet(f"{idx}/lists")
+    assert stored.where(F.col("vec_id") == 7).count() == 2  # old + new row
+
+    probe = spark.createDataFrame(
+        [(900000, new_vec)], "vec_id long, embedding array<double>"
+    )
+    got = similarity.query_ivf_index(probe, idx, k=1, n_probe=8).collect()
+    assert [(r.neighbor_id, r.sim) for r in got] == [(7, 1.0)]
+
+
 def test_stream_index_vectors_into_ivfpq(spark, tmp_path_factory):
     """The same continuous-ingestion contract against an IVF-PQ
     target, auto-detected from the directory layout: streamed novel
